@@ -42,47 +42,52 @@ object IngestJob {
     val control = ControlFile.read(spark, controlPath)
     control.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // ---- phase 1: updates ------------------------------------------
-    val updates: Dataset[(String, Seq[Update])] =
-      ControlFile.updatedDocuments(control).as[(String, Seq[Update])]
-        // same lesson as phase 2 (NewDocuments.ingestBatch): the control
-        // file is ONE json file → one input partition, so without this
-        // every document's rename/edit I/O runs serially in a single
-        // task. One row = one document with its grouped actions, so the
-        // per-document sequential semantics (U1) survive any partitioning;
-        // the shuffle moves only ids + update metadata. Measured by the
-        // updates-only soak: 42 → 216 updates/sec at 8 cores.
-        .repartition(spark.sparkContext.defaultParallelism)
-    val updateResults: Dataset[IngestResult] = updates.mapPartitions { rows =>
-      val c = conf.value
-      rows.map { case (documentId, docUpdates) =>
-        try {
-          val actionResults =
-            Updates.updateDocument(documentId, docUpdates, cfg, runTs, c)
-          // faithful report semantics: per-action error lists do NOT fail
-          // the document (reference main.py:184-196 discards them too),
-          // but they must not vanish silently — surface them in the log
-          actionResults.filter(_.error != "[]").foreach { r =>
-            JsonLog.error("updated_document_actions",
-              s"update action '${r.update_type}' on $documentId " +
-                s"reported errors: ${r.error}",
-              "document_id" -> documentId)
+    // released on every exit: a malformed control file or a failed
+    // parser-input write must not leave the cached relation behind in a
+    // long-lived session
+    val (updateReport, newReport) = try {
+      // ---- phase 1: updates ------------------------------------------
+      val updates: Dataset[(String, Seq[Update])] =
+        ControlFile.updatedDocuments(control).as[(String, Seq[Update])]
+          // same lesson as phase 2 (NewDocuments.ingestBatch): the control
+          // file is ONE json file → one input partition, so without this
+          // every document's rename/edit I/O runs serially in a single
+          // task. One row = one document with its grouped actions, so the
+          // per-document sequential semantics (U1) survive any partitioning;
+          // the shuffle moves only ids + update metadata. Measured by the
+          // updates-only soak: 42 → 216 updates/sec at 8 cores.
+          .repartition(spark.sparkContext.defaultParallelism)
+      val updateResults: Dataset[IngestResult] = updates.mapPartitions { rows =>
+        val c = conf.value
+        rows.map { case (documentId, docUpdates) =>
+          try {
+            val actionResults =
+              Updates.updateDocument(documentId, docUpdates, cfg, runTs, c)
+            // faithful report semantics: per-action error lists do NOT fail
+            // the document (reference main.py:184-196 discards them too),
+            // but they must not vanish silently — surface them in the log
+            actionResults.filter(_.error != "[]").foreach { r =>
+              JsonLog.error("updated_document_actions",
+                s"update action '${r.update_type}' on $documentId " +
+                  s"reported errors: ${r.error}",
+                "document_id" -> documentId)
+            }
+            IngestResult(documentId, "updated", None)
+          } catch {
+            case e: Exception =>
+              IngestResult(documentId, "updated",
+                Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
           }
-          IngestResult(documentId, "updated", None)
-        } catch {
-          case e: Exception =>
-            IngestResult(documentId, "updated",
-              Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
         }
       }
-    }
-    // the barrier: collect phase-1 results before phase 2 triggers
-    val updateReport = updateResults.collect().toSeq
+      // the barrier: collect phase-1 results before phase 2 triggers
+      val updateReport = updateResults.collect().toSeq
 
-    // ---- phase 2: new documents ------------------------------------
-    val newReport = NewDocuments
-      .ingestBatch(control, cfg, fetcher, converter, runTs, conf)
-    control.unpersist()
+      // ---- phase 2: new documents ------------------------------------
+      val newReport = NewDocuments
+        .ingestBatch(control, cfg, fetcher, converter, runTs, conf)
+      (updateReport, newReport)
+    } finally control.unpersist()
 
     // ---- report (O4/K3): one JSON array, deterministic order --------
     val results = (updateReport ++ newReport).sortBy(r => (r.ingest_type, r.document_id))

@@ -175,18 +175,21 @@ object NewDocuments {
     val processed = process(
       newDocs, cfg.documentRoot, fetcher, converter, runTs, conf)
     processed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    processed.count()
-    writeParserInputs(processed,
-      s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}", conf)
-    // scale-safe report: project to the three report fields BEFORE the
-    // driver collect — the full Processed row (whole BackendDocument
-    // struct) never leaves the executors; at 10^8 docs the driver holds
-    // ~3 short strings per row, not the document metadata
-    val out = processed
-      .map(p => Schemas.IngestResult(p.doc.import_id, "new", p.error))
-      .collect().toSeq
-    processed.unpersist()
-    out
+    // released on every exit: a parser-input write that still fails after
+    // its retries must not leave the cached relation behind (IngestStream
+    // runs this in a long-lived foreachBatch)
+    try {
+      processed.count()
+      writeParserInputs(processed,
+        s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}", conf)
+      // scale-safe report: project to the three report fields BEFORE the
+      // driver collect — the full Processed row (whole BackendDocument
+      // struct) never leaves the executors; at 10^8 docs the driver holds
+      // ~3 short strings per row, not the document metadata
+      processed
+        .map(p => Schemas.IngestResult(p.doc.import_id, "new", p.error))
+        .collect().toSeq
+    } finally processed.unpersist()
   }
 
   /** K2 sink: one pretty-printed JSON per document at

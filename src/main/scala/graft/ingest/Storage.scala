@@ -1,9 +1,11 @@
 package graft.ingest
 
+import java.io.{File, FileInputStream, FileNotFoundException, InputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption, Path => NioPath}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 
 /** Object-storage access through the Hadoop FileSystem API, so every
   * location is a generic URI — `file://` in tests, `s3a://` (or any other
@@ -13,61 +15,137 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * All writes overwrite in place: combined with content-hash keys (C7/C8)
   * this makes Spark task retries idempotent (SURVEY.md §4 retry note).
+  *
+  * Two paths, chosen from the file system a path resolves to (not from
+  * its text, so default-FS-relative paths resolve as before):
+  *
+  *  - Hadoop's local file system (`LocalFileSystem` / `RawLocalFileSystem`)
+  *    is bypassed: `exists`, `readBytes`, `writeBytes` and `rename` go
+  *    through `java.nio.file`. Without libhadoop, Hadoop sets permissions
+  *    by forking `chmod` on every create (even with a null permission),
+  *    on every new directory, and once more for each `.crc` sidecar.
+  *    Measured with Hadoop 3.4.2 on a 4-core Linux box, one thread, 200
+  *    ops each, forks counted as JFR `jdk.ProcessStart` events:
+  *
+  *    | operation                  | forks/op | time/op  |
+  *    |----------------------------|----------|----------|
+  *    | `LocalFileSystem.create`   | 2        | 8.5 ms   |
+  *    | raw create                 | 1        | 3.8 ms   |
+  *    | `mkdirs` of a new dir      | 1        | 4.0 ms   |
+  *    | `exists`/`rename`/`delete` | 0        | ≤0.14 ms |
+  *
+  *    Local files are therefore written without checksum sidecars, and
+  *    with the process umask rather than `fs.permissions.umask-mode`. A
+  *    write or rename deletes the `.<name>.crc` sidecar of every path it
+  *    replaces or moves, so a later Hadoop read of a file Hadoop first
+  *    wrote never checks new bytes against a stale checksum.
+  *  - Every other file system (s3a, abfs, any filter file system) uses
+  *    the Hadoop API unchanged.
   */
 object Storage extends Serializable {
 
   def fs(path: String, conf: Configuration): FileSystem =
     new Path(path).getFileSystem(conf)
 
+  /** The local file behind `path` when it resolves to Hadoop's local file
+    * system (resolved the way `RawLocalFileSystem` does), else None.
+    */
+  private def localFile(path: String, conf: Configuration): Option[NioPath] = {
+    val p = new Path(path)
+    p.getFileSystem(conf) match {
+      case f @ (_: LocalFileSystem | _: RawLocalFileSystem) =>
+        Some(new File(f.makeQualified(p).toUri.getPath).toPath)
+      case _ => None
+    }
+  }
+
+  /** Drops the checksum sidecar Hadoop's `LocalFileSystem` keeps for `file`. */
+  private def deleteSidecar(file: NioPath): Unit =
+    Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
+
   def exists(path: String, conf: Configuration): Boolean =
-    fs(path, conf).exists(new Path(path))
+    localFile(path, conf) match {
+      case Some(file) => Files.exists(file)
+      case None => fs(path, conf).exists(new Path(path))
+    }
 
   def readString(path: String, conf: Configuration): String =
     new String(readBytes(path, conf), StandardCharsets.UTF_8)
 
+  /** Whole-file read; a missing file throws `FileNotFoundException` on
+    * both paths.
+    */
   def readBytes(path: String, conf: Configuration): Array[Byte] = {
-    val p = new Path(path)
-    val in = fs(path, conf).open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+    val in: InputStream = localFile(path, conf) match {
+      case Some(file) => new FileInputStream(file.toFile)
+      case None => fs(path, conf).open(new Path(path))
+    }
+    try in.readAllBytes()
+    finally in.close()
   }
+
+  /** One read instead of `exists` + `readBytes`: a missing file is None,
+    * whether open or the first read reports it (object stores open
+    * lazily).
+    */
+  def readIfExists(path: String, conf: Configuration): Option[Array[Byte]] =
+    try Some(readBytes(path, conf))
+    catch { case _: FileNotFoundException => None }
 
   def writeString(path: String, text: String, conf: Configuration): Unit =
     writeBytes(path, text.getBytes(StandardCharsets.UTF_8), conf)
 
-  def writeBytes(path: String, data: Array[Byte], conf: Configuration): Unit = {
-    val p = new Path(path)
-    val out = fs(path, conf).create(p, true)
-    try out.write(data)
-    finally out.close()
-  }
+  /** Creates parent dirs, then overwrites the file. */
+  def writeBytes(path: String, data: Array[Byte], conf: Configuration): Unit =
+    localFile(path, conf) match {
+      case Some(file) =>
+        Files.createDirectories(file.getParent)
+        deleteSidecar(file)
+        Files.write(file, data)
+      case None =>
+        val out = fs(path, conf).create(new Path(path), true)
+        try out.write(data)
+        finally out.close()
+    }
 
   /** Existence-guarded rename (reference `updated_document_actions.py:415-450`):
     * missing source → benign no-op (None); failure → error message string.
-    * Parent dirs of the target are created first (Hadoop rename does not).
+    * Parent dirs of the target are created first (Hadoop rename does not),
+    * and an existing target is overwritten.
     */
   def rename(src: String, dst: String, conf: Configuration): Option[String] =
     try {
-      val f = fs(src, conf)
-      val srcPath = new Path(src)
-      if (f.exists(srcPath)) {
-        val dstPath = new Path(dst)
-        if (dstPath.getParent != null) f.mkdirs(dstPath.getParent)
-        // cloud-store rename overwrites; RawLocalFileSystem refuses an
-        // existing target — normalize to overwrite semantics
-        if (f.exists(dstPath)) f.delete(dstPath, false)
-        if (!f.rename(srcPath, dstPath))
-          return Some(s"rename failed: $src -> $dst")
+      localFile(src, conf).zip(localFile(dst, conf)) match {
+        case Some((from, to)) => renameLocal(from, to); None
+        case None => renameHadoop(src, dst, conf)
       }
-      None
     } catch {
       case e: Exception => Some(e.toString)
     }
+
+  private def renameLocal(from: NioPath, to: NioPath): Unit =
+    if (Files.exists(from)) {
+      Files.createDirectories(to.getParent)
+      deleteSidecar(from)
+      deleteSidecar(to)
+      Files.move(from, to, StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  private def renameHadoop(src: String, dst: String,
+      conf: Configuration): Option[String] = {
+    val f = fs(src, conf)
+    val srcPath = new Path(src)
+    if (f.exists(srcPath)) {
+      val dstPath = new Path(dst)
+      if (dstPath.getParent != null) f.mkdirs(dstPath.getParent)
+      // cloud-store rename overwrites; RawLocalFileSystem refuses an
+      // existing target — normalize to overwrite semantics
+      if (f.exists(dstPath)) f.delete(dstPath, false)
+      if (!f.rename(srcPath, dstPath))
+        return Some(s"rename failed: $src -> $dst")
+    }
+    None
+  }
 
   /** Recursive listing of file paths under a prefix (test/report helper). */
   def listFiles(root: String, conf: Configuration): Seq[String] = {

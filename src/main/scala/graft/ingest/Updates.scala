@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
@@ -65,9 +66,9 @@ object Updates {
   def updateFileField(path: String, updateType: String,
       newValueJson: Option[String], existingValueJson: Option[String],
       conf: Configuration): Option[String] = {
-    if (!Storage.exists(path, conf)) return None
+    val bytes = Storage.readIfExists(path, conf).getOrElse(return None)
     val pipelineField = Mappings.PipelineFieldMapping(updateType)
-    val doc = PyJson.parse(Storage.readString(path, conf))
+    val doc = PyJson.parse(new String(bytes, StandardCharsets.UTF_8))
     val obj = doc.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     if (!obj.has(pipelineField))
       return Some(s"KeyError: '$pipelineField' not found in $path")
