@@ -48,6 +48,32 @@ object Converter {
       "For non-commercial use only. Reach out to us at " +
       "support@climatepolicyradar.org if you have any enquiries."
   }
+
+  /** Per-capability converter selection (reference `Dockerfile:3-6`
+    * installs LibreOffice and browser deps): each capability the image
+    * has runs for `real`, the other takes `stub`. Probing one binary for
+    * both would either fail every capture at runtime or needlessly stub
+    * conversions the image can perform. Each side watermarks its own
+    * output: [[PdfWatermark]] cannot parse the stub's fake PDFs, so a
+    * mixed converter routes each watermark by [[StubConverter.isStubPdf]].
+    */
+  def select(haveSoffice: Boolean, haveChromium: Boolean,
+      real: Converter, stub: StubConverter): Converter =
+    (haveSoffice, haveChromium) match {
+      case (true, true) => real
+      case (false, false) => stub
+      case _ => new Converter {
+        private val docSide = if (haveSoffice) real else stub
+        private val capSide = if (haveChromium) real else stub
+        def docToPdf(content: Array[Byte]): Array[Byte] =
+          docSide.docToPdf(content)
+        def capturePdfFromUrl(url: String): (Array[Byte], Option[String]) =
+          capSide.capturePdfFromUrl(url)
+        def addLastPageWatermark(pdf: Array[Byte], text: String): Array[Byte] =
+          (if (StubConverter.isStubPdf(pdf)) stub else real)
+            .addLastPageWatermark(pdf, text)
+      }
+    }
 }
 
 /** Production converter: LibreOffice for DOC(X)→PDF (the reference's
@@ -61,8 +87,8 @@ object Converter {
   *
   * Instantiate only where the binaries exist on the executor image
   * (reference `Dockerfile:3-6` installs libreoffice + playwright deps);
-  * [[ProcessConverter.available]] probes for them, and [[IngestMain]]
-  * falls back to [[StubConverter]] when absent — which keeps this
+  * [[ProcessConverter.available]] probes for them, and
+  * [[Converter.select]] falls back to [[StubConverter]] when absent — which keeps this
   * container's tests hermetic (zero egress, no office suite).
   */
 class ProcessConverter(
@@ -138,7 +164,7 @@ object ProcessConverter {
 class StubConverter extends Converter {
 
   private def fakePdf(tag: String, payload: Array[Byte]): Array[Byte] = {
-    val head = s"%PDF-1.4\n% graft-stub:$tag\n"
+    val head = s"${StubConverter.Head}$tag\n"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val tail = "\n%%EOF\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)
     head ++ payload ++ tail
@@ -159,4 +185,13 @@ class StubConverter extends Converter {
   override def addLastPageWatermark(pdf: Array[Byte], text: String): Array[Byte] =
     pdf ++ s"\n% watermark: ${text.replace("\n", " ")}\n"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+}
+
+object StubConverter {
+  /** Start of every PDF the stub emits. */
+  private val Head = "%PDF-1.4\n% graft-stub:"
+  private val HeadBytes = Head.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** True for bytes the stub produced (its watermark appends to them). */
+  def isStubPdf(pdf: Array[Byte]): Boolean = pdf.startsWith(HeadBytes)
 }

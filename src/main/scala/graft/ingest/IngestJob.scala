@@ -5,13 +5,14 @@ import java.time.Instant
 import graft.model.Schemas.{BackendDocument, IngestResult, Update, UpdateConfig}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 
 /** Two-phase ingest driver (SURVEY.md §2 O1–O5, §3.1).
   *
   * Phase 1 (updates) runs TO COMPLETION before phase 2 (new documents)
   * starts — the barrier is a correctness property (a new doc and an update
   * to the same id must not race, reference `main.py:164-229`). Each phase
-  * is a separate Spark action over an effectful partition stage; per-row
+  * is one `collect` over one effectful partition stage; per-row
   * failures become `IngestResult.error` strings and the job always
   * completes (reference `main.py:184-196,221-227`; exit 0 asserted by
   * `test_integration.py:440,494`).
@@ -36,7 +37,7 @@ object IngestJob {
       converter: Converter,
       runTs: Instant): RunReport = {
     import spark.implicits._
-    val conf = new SerializableConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
 
     val controlPath = s"${cfg.pipelineRoot}/$inputDirPath/$updatesFileName"
     val control = ControlFile.read(spark, controlPath)

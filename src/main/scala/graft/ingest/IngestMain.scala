@@ -24,22 +24,52 @@ import org.apache.spark.sql.SparkSession
   */
 object IngestMain {
 
-  def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    def req(k: String): String = opts.getOrElse(k,
-      sys.error(s"missing required option --$k"))
+  /** A parsed command line. */
+  case class Args(cfg: UpdateConfig, inputDirPath: String, updatesFileName: String)
 
-    val cfg = UpdateConfig(
-      pipelineRoot = req("pipeline-root").stripSuffix("/"),
-      documentRoot = req("document-root").stripSuffix("/"),
-      parserInputPrefix = opts.getOrElse("output-prefix", "parser_input"),
-      embeddingsInputPrefix =
-        opts.getOrElse("embeddings-input-prefix", "embeddings_input"),
-      indexerInputPrefix =
-        opts.getOrElse("indexer-input-prefix", "indexer_input"),
-      archivePrefix = opts.getOrElse("archive-prefix", "archive"))
+  /** Every accepted option with its default; `None` marks a required one. */
+  private val options: Seq[(String, Option[String])] = Seq(
+    "pipeline-root" -> None,
+    "document-root" -> None,
+    "input-dir-path" -> None,
+    "updates-file-name" -> Some("new_and_updated_documents.json"),
+    "output-prefix" -> Some("parser_input"),
+    "embeddings-input-prefix" -> Some("embeddings_input"),
+    "indexer-input-prefix" -> Some("indexer_input"),
+    "archive-prefix" -> Some("archive"))
+
+  /** Parse `--key value` pairs. Throws `IllegalArgumentException` naming
+    * any unknown, repeated, valueless or missing option, with the list of
+    * accepted ones: a typo must not fall back to a default silently.
+    */
+  def parseArgs(args: Seq[String]): Args = {
+    val names = options.map("--" + _._1)
+    def fail(msg: String): Nothing = throw new IllegalArgumentException(
+      s"$msg; accepted options: ${names.mkString(" ")}")
+    val pairs = args.grouped(2).map {
+      case Seq(k, v) if names.contains(k) => k.drop(2) -> v
+      case Seq(k) if names.contains(k) => fail(s"option $k has no value")
+      case k +: _ => fail(s"unknown option $k")
+    }.toMap
+    if (pairs.size < args.size / 2) fail("an option is given more than once")
+    val opts = options.map { case (k, default) =>
+      k -> pairs.get(k).orElse(default)
+        .getOrElse(fail(s"missing required option --$k"))
+    }.toMap
+    Args(
+      UpdateConfig(
+        pipelineRoot = opts("pipeline-root").stripSuffix("/"),
+        documentRoot = opts("document-root").stripSuffix("/"),
+        parserInputPrefix = opts("output-prefix"),
+        embeddingsInputPrefix = opts("embeddings-input-prefix"),
+        indexerInputPrefix = opts("indexer-input-prefix"),
+        archivePrefix = opts("archive-prefix")),
+      opts("input-dir-path"),
+      opts("updates-file-name"))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val parsed = parseArgs(args.toSeq)
 
     val spark = SparkSession.builder()
       .appName("graft-ingest")
@@ -49,37 +79,13 @@ object IngestMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val report = IngestJob.run(spark, cfg,
-      inputDirPath = req("input-dir-path"),
-      updatesFileName =
-        opts.getOrElse("updates-file-name", "new_and_updated_documents.json"),
+    val report = IngestJob.run(spark, parsed.cfg, parsed.inputDirPath,
+      parsed.updatesFileName,
       fetcher = new JdkHttpFetcher(),
-      // per-CAPABILITY converter selection (reference Dockerfile installs
-      // libreoffice + browser deps): a LibreOffice-only image still
-      // converts DOC(X) for real and only HTML capture takes the
-      // deterministic stub — probing one binary for both capabilities
-      // would either fail every capture at runtime or needlessly stub
-      // conversions the image can perform
-      converter = {
-        val real = new ProcessConverter()
-        val stub = new StubConverter()
-        val haveSoffice = ProcessConverter.available("soffice")
-        val haveChromium = ProcessConverter.available("chromium")
-        (haveSoffice, haveChromium) match {
-          case (true, true)   => real
-          case (false, false) => stub
-          case _ => new Converter {
-            private val docSide = if (haveSoffice) real else stub
-            private val capSide = if (haveChromium) real else stub
-            def docToPdf(content: Array[Byte]): Array[Byte] =
-              docSide.docToPdf(content)
-            def capturePdfFromUrl(url: String): (Array[Byte], Option[String]) =
-              capSide.capturePdfFromUrl(url)
-            def addLastPageWatermark(pdf: Array[Byte], text: String): Array[Byte] =
-              real.addLastPageWatermark(pdf, text) // PdfWatermark: no binary
-          }
-        }
-      },
+      converter = Converter.select(
+        haveSoffice = ProcessConverter.available("soffice"),
+        haveChromium = ProcessConverter.available("chromium"),
+        real = new ProcessConverter(), stub = new StubConverter()),
       runTs = Instant.now())
 
     val errs = report.results.count(_.error.isDefined)

@@ -6,18 +6,19 @@ import java.time.Instant
 import graft.functions.{ContentTypes, FileNames, Slugify}
 import graft.model.{Mappings, Schemas}
 import graft.model.Schemas.BackendDocument
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** New-document pipeline (SURVEY.md §2 P1–P5, C1–C9, K1–K2, §3.2).
   *
   * One effectful `mapPartitions` stage performs download → content-type
-  * detection → normalize-to-PDF → content-hash keying → CDN blob store,
-  * one fetcher/converter per partition, every row's failure captured as an
-  * error value (reference `main.py:209-227` semantics: the job never dies
-  * on a row). The stage is deliberately OUTSIDE Catalyst's expression
-  * space so the optimizer can never reorder or re-evaluate the effects
-  * (SURVEY.md §4.1); callers must materialize (persist/count) before
-  * reusing the result.
+  * detection → normalize-to-PDF → content-hash keying → CDN blob store →
+  * parser-input record, one fetcher/converter per partition, and one
+  * `collect` of the report rows is its only action ([[ingestBatch]]).
+  * Every fetch, convert or upload failure becomes the row's error value
+  * (reference `main.py:209-227` semantics: the job never dies on a row).
+  * The stage is deliberately OUTSIDE Catalyst's expression space so the
+  * optimizer can never reorder or re-evaluate the effects (SURVEY.md
+  * §4.1).
   *
   * The pure pieces (slugify C9, content sniffing C1, byte-aware filename
   * C8) are the unit-tested functions from `graft.functions`, shared with
@@ -137,29 +138,24 @@ object NewDocuments {
     }
   }
 
-  /** The distributed stage: one fetcher/converter per partition. */
-  def process(
-      newDocs: Dataset[BackendDocument],
-      documentRoot: String,
-      fetcher: Fetcher,
-      converter: Converter,
-      runTs: Instant,
-      conf: SerializableConf): Dataset[Processed] = {
-    val spark = newDocs.sparkSession
-    import spark.implicits._
-    newDocs.mapPartitions { docs =>
-      val c = conf.value
-      docs.map(doc =>
-        processOne(doc, documentRoot, fetcher, converter, runTs, c))
-    }
-  }
-
   /** Phase-2 pipeline over a control DataFrame, shared by the batch job
-    * and the streaming foreachBatch: explode → repartition (the control
-    * file is ONE json file → one input partition; without this every
-    * fetch runs serially in a single task — the shuffle moves only
-    * document metadata) → effectful fetch stage → materialize once →
-    * parser-input sink. Returns the per-document outcomes.
+    * and the streaming foreachBatch, in one effectful `mapPartitions`
+    * under one `collect`. The control file is ONE json file, so one input
+    * partition: the repartition spreads the fetches over every task slot
+    * and moves only document metadata. Each row runs [[processOne]], then
+    * (error-free rows only, skips included) writes its K2 parser input,
+    * one pretty-printed JSON at `{pipelineRoot}/{parserInputPrefix}/
+    * {document_id}.json` in exact field order (reference
+    * `api_client.py:180-193`, `main.py:216-220`). The write sits outside
+    * `processOne`'s row-level catch: a write that still fails after its
+    * retries fails the run. Only the three report fields reach the
+    * driver, never the document metadata.
+    *
+    * Trade-off: nothing is cached between upload and sink, so on a
+    * cluster a task retried after a failed write re-runs its partition's
+    * fetch and upload. Content-hash keys make a re-upload overwrite
+    * itself (C7/C8); HTML captures are the exception, since every capture
+    * yields different bytes and so a second blob.
     */
   def ingestBatch(
       control: org.apache.spark.sql.DataFrame,
@@ -167,50 +163,27 @@ object NewDocuments {
       fetcher: Fetcher,
       converter: Converter,
       runTs: Instant,
-      conf: SerializableConf): Seq[Schemas.IngestResult] = {
+      conf: SerializableConfiguration): Seq[Schemas.IngestResult] = {
     val spark = control.sparkSession
     import spark.implicits._
-    val newDocs = ControlFile.newDocuments(control).as[BackendDocument]
+    val outputLocation = s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}"
+    ControlFile.newDocuments(control).as[BackendDocument]
       .repartition(spark.sparkContext.defaultParallelism)
-    val processed = process(
-      newDocs, cfg.documentRoot, fetcher, converter, runTs, conf)
-    processed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // released on every exit: a parser-input write that still fails after
-    // its retries must not leave the cached relation behind (IngestStream
-    // runs this in a long-lived foreachBatch)
-    try {
-      processed.count()
-      writeParserInputs(processed,
-        s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}", conf)
-      // scale-safe report: project to the three report fields BEFORE the
-      // driver collect — the full Processed row (whole BackendDocument
-      // struct) never leaves the executors; at 10^8 docs the driver holds
-      // ~3 short strings per row, not the document metadata
-      processed
-        .map(p => Schemas.IngestResult(p.doc.import_id, "new", p.error))
-        .collect().toSeq
-    } finally processed.unpersist()
-  }
-
-  /** K2 sink: one pretty-printed JSON per document at
-    * `{outputLocation}/{document_id}.json`, exact field order
-    * (reference `api_client.py:180-193`). Only non-errored rows are
-    * written (reference `main.py:216-220` writes on success only).
-    */
-  def writeParserInputs(
-      processed: Dataset[Processed],
-      outputLocation: String,
-      conf: SerializableConf): Unit =
-    processed.filter((p: Processed) => p.error.isEmpty).foreachPartition {
-      (rows: Iterator[Processed]) =>
+      .mapPartitions { docs =>
         val c = conf.value
-        rows.foreach { p =>
-          val text = ParserInputJson.render(
-            p.doc, p.cdn_object, p.content_type, p.md5_sum)
-          Fetcher.withRetry(4) {
-            Storage.writeString(
-              s"$outputLocation/${p.doc.import_id}.json", text, c)
+        docs.map { doc =>
+          val p = processOne(doc, cfg.documentRoot, fetcher, converter, runTs, c)
+          if (p.error.isEmpty) {
+            val text = ParserInputJson.render(
+              doc, p.cdn_object, p.content_type, p.md5_sum)
+            Fetcher.withRetry(4) {
+              Storage.writeString(
+                s"$outputLocation/${doc.import_id}.json", text, c)
+            }
           }
+          Schemas.IngestResult(doc.import_id, "new", p.error)
         }
-    }
+      }
+      .collect().toSeq
+  }
 }

@@ -7,6 +7,7 @@ import graft.model.Schemas.{BackendDocument, UpdateConfig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Continuous ingest: the reference is a single-shot batch job re-run per
   * control file (SURVEY.md §3.1); this wrapper turns the same
@@ -16,11 +17,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * parser-input records and blobs.
   *
   * Shape: `readStream` (file source, one row per control file) →
-  * `foreachBatch` running the SAME batch stages (explode → effectful
-  * fetch partitions → sinks) — the unified-API pattern that keeps one
-  * implementation for both deployment modes. Updates stay batch-only:
-  * their strict per-document ordering against new-doc ingestion
-  * (SURVEY.md §2 O2) has no streaming analogue in the reference.
+  * `foreachBatch` running the SAME batch stage (explode → one effectful
+  * fetch/upload/parser-input partition stage) — the unified-API pattern
+  * that keeps one implementation for both deployment modes. Updates stay
+  * batch-only: their strict per-document ordering against new-doc
+  * ingestion (SURVEY.md §2 O2) has no streaming analogue in the reference.
   */
 object IngestStream {
 
@@ -42,7 +43,7 @@ object IngestStream {
       converter: Converter,
       clock: () => Instant = () => Instant.now(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val conf = new SerializableConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val control = spark.readStream
       .schema(ControlFile.pipelineUpdatesSchema)
       .option("multiLine", true)
