@@ -88,8 +88,8 @@ object Converter {
   * Instantiate only where the binaries exist on the executor image
   * (reference `Dockerfile:3-6` installs libreoffice + playwright deps);
   * [[ProcessConverter.available]] probes for them, and
-  * [[Converter.select]] falls back to [[StubConverter]] when absent — which keeps this
-  * container's tests hermetic (zero egress, no office suite).
+  * [[Converter.select]] falls back to [[StubConverter]] when absent —
+  * which keeps the tests hermetic (no network, no office suite).
   */
 class ProcessConverter(
     sofficeBin: String = "soffice",
