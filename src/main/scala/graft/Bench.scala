@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A short warmup (table footers + one tiny query)
@@ -46,18 +45,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val calibSec = calibrate()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // events.parquet is TIMESTAMP(NANOS): without this the warmup read
-    // below throws (and the first events query re-absorbs the warmup)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the session reads TIMESTAMP(NANOS) as longs: without that the
+    // events warmup read below throws (and the first events query
+    // re-absorbs the warmup)
+    val spark = Harness.session()
 
     // warmup: touch every table (footer + codegen paths), one tiny agg
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -118,23 +109,21 @@ object Bench {
     // operator caches and measures the same plan, never a cache hit
     // (Spark's CacheManager would otherwise serve rep 1's persisted
     // frames by logical-plan identity).
-    // SPARK_GRAFT_BENCH_ONLY=q166_x,q167_y times a subset during local
-    // plan iteration; unset -> the driver's full bench, unchanged
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // SPARK_GRAFT_ONLY=q166_x,q167_y times a subset during local plan
+    // iteration; unset -> the driver's full bench, unchanged
+    val only = Harness.only
     // Per-query markers go to a FILE, not stderr: sbt labels every
     // stderr line `[error]`, which made BENCH_r12's tail look alarming.
     // Each marker carries a wall-clock timestamp (log4j's stderr
     // warnings carry one too, so a slow band still correlates to its
     // CacheManager/storage warnings by time) plus a heap gauge and the
     // raw reps, so sweep-variance questions settle from this file alone.
-    // Partial (BENCH_ONLY) runs write a SEPARATE markers file so a
-    // single-family debug sweep never clobbers the committed full-run
-    // record (the VERIFY_MARKERS lesson, applied here too).
-    val markersPath =
-      if (only.isDefined) "BENCH_MARKERS_partial.log" else "BENCH_MARKERS.log"
+    // Partial (SPARK_GRAFT_ONLY) runs write SEPARATE markers, detail and
+    // summary files so a single-family debug sweep never clobbers the
+    // committed full-run record (the VERIFY_MARKERS lesson, applied here too).
+    def record(base: String): String = if (only.isDefined) s"${base}_partial" else base
     val markers = new java.io.PrintWriter(
-      new java.io.FileWriter(markersPath, false))
+      new java.io.FileWriter(record("BENCH_MARKERS") + ".log", false))
     markers.println(f"calib_sec=$calibSec%.3f")
     val rt = Runtime.getRuntime
     def heapMb: Long = (rt.totalMemory - rt.freeMemory) >> 20
@@ -147,16 +136,22 @@ object Bench {
         .map { case (name, fn) =>
         markers.println(s"${java.time.Instant.now} start $name heapMb=$heapMb")
         markers.flush()
+        // a rep that throws is no time: the query is marked failed and
+        // left out of the total instead of counting as a fast one
+        var failure = Option.empty[Throwable]
         val reps = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           try CacheScope.scoped { fn(spark, sfDir).count() }
-          catch { case _: Throwable => -1L }
+          catch { case e: Throwable => failure = Some(e) }
           (System.nanoTime() - t0) / 1e9
         }
+        val failed = failure.fold("")(e =>
+          s" failed=${e.getClass.getName}: ${e.getMessage}".replace('\n', ' '))
         markers.println(s"${java.time.Instant.now} done  $name " +
-          f"reps=[${reps.map(r => f"$r%.3f").mkString(",")}] heapMb=$heapMb")
+          f"reps=[${reps.map(r => f"$r%.3f").mkString(",")}] heapMb=$heapMb" +
+          failed)
         markers.flush()
-        (name, reps.min, reps)
+        (name, reps.min, reps, failure.isDefined)
       }
     } finally markers.close()
     def r3(v: Double): String = f"$v%.3f"
@@ -167,34 +162,30 @@ object Bench {
     // queries the all-queries JSON line is ~15 KB, and a harness that
     // keeps only a stdout tail truncates it mid-string (every BENCH_r*
     // record through round 8 has parsed:null for exactly this reason).
-    val detail = results.map { case (k, v, rs) =>
+    val detail = results.map { case (k, v, rs, failed) =>
       s"\"" + k + "\":{\"min\":" + r3(v) + ",\"reps\":" +
-        rs.map(r3).mkString("[", ",", "]") + "}"
+        rs.map(r3).mkString("[", ",", "]") +
+        (if (failed) ",\"failed\":true}" else "}")
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val detailLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"calib_sec":${r3(calibSec)},"queries":$detail,"sf":"$sfDir"}"""
-    val detailPath = java.nio.file.Paths.get(
-      if (only.isDefined) "BENCH_DETAIL_partial.json" else "BENCH_DETAIL.json")
-    java.nio.file.Files.write(detailPath,
-      (detailLine + "\n").getBytes("UTF-8"))
+    val timed = results.filterNot(_._4)
+    val total = timed.map(_._2).sum
+    def totalLine(queries: String, fields: String): String =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"calib_sec":${r3(calibSec)},$fields"queries":$queries,"sf":"$sfDir"}"""
+    def write(base: String, line: String): Unit = java.nio.file.Files
+      .writeString(java.nio.file.Paths.get(record(base) + ".json"), line + "\n")
+    write("BENCH_DETAIL", totalLine(detail, ""))
     // stdout gets ONE compact line that survives a 2000-char tail:
     // totals for everything, per-query numbers for the TOP slowest only
     // (3 dp), sized so line + sbt epilogue fit the tail window.
-    val top = results.sortBy(-_._2).take(30)
-      .map { case (k, v, _) => s"\"" + k + "\":" + r3(v) }
+    val top = timed.sortBy(-_._2).take(30)
+      .map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"calib_sec":${r3(calibSec)},"detail":"BENCH_DETAIL.json","queries":$top,"sf":"$sfDir"}"""
+    val line = totalLine(top, "\"detail\":\"BENCH_DETAIL.json\",")
     // The summary line ALSO goes to a sidecar file: three rounds of
     // "parsed": null showed the driver's stdout window is not a
     // reliable channel for the payload, and a file consumer can't be
     // confused by the deliberate double stdout emission below either.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        if (only.isDefined) "BENCH_SUMMARY_partial.json"
-        else "BENCH_SUMMARY.json"),
-      (line + "\n").getBytes("UTF-8"))
+    write("BENCH_SUMMARY", line)
     println(line)
     // stop BEFORE the final print too: Spark's shutdown chatter lands
     // on stderr AFTER the payload, and a driver that tails the merged

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev harness: empirical scaling probe for the corpus operators' scale
@@ -31,14 +31,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").cache()
@@ -47,17 +40,12 @@ object ScaleProbe {
     val nDocs = docs.count()
     val nVecs = emb.count()
 
-    def replicateDocs(r: Int): DataFrame =
-      (0 until r).map { i =>
-        docs.select((col("doc_id") + lit(i.toLong * 10_000_000L))
-          .as("doc_id"), col("text"))
-      }.reduce(_ unionAll _)
-
-    def replicateVecs(r: Int): DataFrame =
-      (0 until r).map { i =>
-        emb.select((col("vec_id") + lit(i.toLong * 10_000_000L))
-          .as("vec_id"), col("embedding"))
-      }.reduce(_ unionAll _)
+    // r copies of `df` unioned, each with `key` shifted by 10M per copy
+    def replicate(df: DataFrame, key: String)(r: Int): DataFrame =
+      (0 until r).map(i => df.withColumn(key, col(key) + lit(i.toLong * 10_000_000L)))
+        .reduce(_ unionAll _)
+    val replicateDocs = replicate(docs, "doc_id") _
+    val replicateVecs = replicate(emb, "vec_id") _
 
     // SPARK_GRAFT_PROBE_ONLY=bitext,xling runs only sweeps whose label
     // starts with a listed prefix — iterate one family without paying
@@ -303,7 +291,6 @@ object ScaleProbe {
     // events replicas shift user_id, so per-user chains stay per-user:
     // replicas add USERS, the per-step joins stay key-local
     val ev = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       val fixed = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -317,12 +304,7 @@ object ScaleProbe {
         .cache()
     }
     val nEv = ev.count()
-    def replicateEvents(r: Int): DataFrame =
-      (0 until r).map { i =>
-        ev.select(col("event_id"),
-          (col("user_id") + lit(i.toLong * 10_000_000L)).as("user_id"),
-          col("event_type"), col("ts"), col("value"))
-      }.reduce(_ unionAll _)
+    val replicateEvents = replicate(ev, "user_id") _
     // funnel: k chained per-user min aggregations — linear in events
     Seq(1, 2, 4, 8).foreach { r =>
       timeWarm(s"funnel r=$r events=${nEv * r}", () =>

@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver smoke stand-in: runs SparkEntry.entry and prints the row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     df.show(truncate = false)
     println(s"[smoke] entry rows=${df.count()}")

@@ -144,15 +144,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val nNew = if (args.nonEmpty) args(0).toInt else 5000
     val nUpd = if (args.length > 1) args(1).toInt else 2000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // soak measures the pipeline, not the log volume: count lines (and
     // error-level lines — per-action errors are log-only by contract, so
     // the zero-error bar must read the log, not just the report)

@@ -1,26 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q115_x,q116_y subsets the dump for local
-    // iteration (compare.py only reads result dirs that exist);
-    // unset -> the driver's full gate, unchanged
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // a SPARK_GRAFT_ONLY subset dumps only its queries (compare.py
+    // only reads result dirs that exist); unset -> the full gate
+    val only = Harness.only
     // Per-query wall seconds → a markers file (the Bench convention):
     // the gate's Spark half is a driver-budget line item (round 14's
     // CORRECTNESS record came back empty when the full gate outgrew
@@ -47,18 +36,9 @@ object Verify {
       markers.println(f"${(System.nanoTime() - t0) / 1e9}%.3f $name")
       markers.flush()
     } finally markers.close()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape of backslash, quote and ALL control chars: a
+    // tab or CR in the SQL would otherwise fail the compare's json.load
+    def q(s: String): String = "\"" + ingest.JsonLog.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

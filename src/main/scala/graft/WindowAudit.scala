@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
 
 /** Diagnostic: list every query whose OPTIMIZED plan still contains an
@@ -15,14 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try CacheScope.scoped {
         val lp = fn(spark, sfDir).queryExecution.optimizedPlan

@@ -3,6 +3,7 @@ package graft.ingest
 import java.time.Instant
 
 import graft.model.Schemas.UpdateConfig
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point (SURVEY.md §2 O1 — reference `main.py:64-125`): the
@@ -20,7 +21,9 @@ import org.apache.spark.sql.SparkSession
   * }}}
   *
   * Parallelism is task slots (the reference's `--worker-count` maps to
-  * Spark's master/parallelism settings, SURVEY.md §4).
+  * Spark's master/parallelism settings, SURVEY.md §4). The master is
+  * spark-submit's `--master`; a direct run without `-Dspark.master=`
+  * uses every local core.
   */
 object IngestMain {
 
@@ -68,13 +71,15 @@ object IngestMain {
       opts("updates-file-name"))
   }
 
+  /** spark-submit's `spark.master` (a builder's `.master` overrides it), else `local[*]`. */
+  def master(conf: SparkConf): String = conf.get("spark.master", "local[*]")
+
   def main(args: Array[String]): Unit = {
     val parsed = parseArgs(args.toSeq)
 
     val spark = SparkSession.builder()
       .appName("graft-ingest")
-      // spark-submit injects the real master; default for direct runs
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+      .master(master(new SparkConf()))
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

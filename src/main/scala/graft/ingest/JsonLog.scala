@@ -39,7 +39,7 @@ object JsonLog extends Serializable {
       .mkString("{", ",", "}"))
   }
 
-  private def esc(s: String): String = {
+  private[graft] def esc(s: String): String = {
     val sb = new StringBuilder
     s.foreach {
       case '"' => sb.append("\\\"")

@@ -1,10 +1,12 @@
 package graft.ingest
 
 import graft.model.Schemas.UpdateConfig
+import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[IngestMain.parseArgs]]: defaults fill in, and a bad command line
   * fails with a message naming the problem and the accepted options.
+  * [[IngestMain.master]]: spark-submit's master wins over the default.
   */
 class IngestMainSpec extends AnyFunSuite {
 
@@ -44,5 +46,10 @@ class IngestMainSpec extends AnyFunSuite {
     assert(failure(required ++ required.take(2): _*).startsWith(
       "an option is given more than once;"))
     assert(failure("stray" +: required: _*).startsWith("unknown option stray;"))
+  }
+
+  test("the configured master is kept; without one the job runs on local[*]") {
+    assert(IngestMain.master(new SparkConf(false).setMaster("yarn")) === "yarn")
+    assert(IngestMain.master(new SparkConf(false)) === "local[*]")
   }
 }
