@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
@@ -10,7 +10,8 @@ import org.apache.spark.GraftBus
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev harness: run SparkEntry queries by name with [[TaskCounters]]
   * attached. Each rep runs in its own CacheScope (else reps 2+ measure
@@ -81,24 +82,40 @@ object Probe {
   * executor run, GC and deserialize time, shuffle fetch wait and bytes,
   * and the longest task. At sf0.1 wall time is mostly per-task and
   * per-stage overhead; run time is the compute, GC the JVM's share of it,
-  * and the max task shows skew. Events arrive asynchronously: drain the
+  * and the max task shows skew. A stage line names the SQL execution the
+  * stage ran for. Events arrive asynchronously: drain the
   * bus (`org.apache.spark.GraftBus.drain`) before reading.
   */
 class TaskCounters extends SparkListener {
   val jobs, stages, tasks = new AtomicInteger
   val runMs, gcMs, deserMs, maxTaskMs, fetchWaitMs, shufReadB, shufWriteB = new AtomicLong
   private val stageLog = new ConcurrentLinkedQueue[String]
+  // a stage's label: its job's root SQL execution's description (the
+  // action's call site), since adaptive execution submits stages from a
+  // pool thread whose call site names no caller; else the stage's name
+  private val execDesc, stageRoot = new ConcurrentHashMap[String, String]
 
-  override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => execDesc.put(s.executionId.toString, s.description)
+    case _ =>
+  }
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    jobs.incrementAndGet()
+    Option(j.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ROOT_ID_KEY)))
+      .foreach(root => j.stageIds.foreach(id => stageRoot.put(id.toString, root)))
+  }
 
   override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
     stages.incrementAndGet()
     val i = s.stageInfo
     def v(f: TaskMetrics => Double) = Option(i.taskMetrics).fold(-1.0)(f)
+    val label = Option(stageRoot.get(i.stageId.toString)).flatMap(r => Option(execDesc.get(r)))
+      .getOrElse(i.name)
     stageLog.add(f"  STAGE ${i.stageId}%4d tasks=${i.numTasks}%4d " +
       f"runSec=${v(_.executorRunTime / 1e3)}%7.2f " +
       f"shufRd=${v(_.shuffleReadMetrics.totalBytesRead / 1e6)}%7.1fMB " +
-      f"shufWr=${v(_.shuffleWriteMetrics.bytesWritten / 1e6)}%7.1fMB ${i.name.take(60)}")
+      f"shufWr=${v(_.shuffleWriteMetrics.bytesWritten / 1e6)}%7.1fMB ${label.take(60)}")
   }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {

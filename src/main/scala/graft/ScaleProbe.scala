@@ -290,19 +290,8 @@ object ScaleProbe {
     // ---- the event-analytics / classical-ML families ------------------
     // events replicas shift user_id, so per-user chains stay per-user:
     // replicas add USERS, the per-step joins stay key-local
-    val ev = {
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      val fixed = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", col("ts")
-            .cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-      fixed.select("event_id", "user_id", "event_type", "ts", "value")
-        .cache()
-    }
+    val ev = SparkEntry.eventsTs(spark.read.parquet(s"$sfDir/events.parquet"))
+      .select("event_id", "user_id", "event_type", "ts", "value").cache()
     val nEv = ev.count()
     val replicateEvents = replicate(ev, "user_id") _
     // funnel: k chained per-user min aggregations — linear in events

@@ -58,7 +58,14 @@ object SparkEntry {
     */
   private def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = T(s, dir, "events")
+    eventsTs(T(s, dir, "events"))
+  }
+
+  /** The events table's `ts` as a plain TIMESTAMP column, whichever
+    * parquet generation `df` was read from (see [[events]]); `df` must
+    * be read with `nanosAsLong` set.
+    */
+  private[graft] def eventsTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -70,7 +77,6 @@ object SparkEntry {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Revenue per region: the full dim-join chain with broadcast dims.

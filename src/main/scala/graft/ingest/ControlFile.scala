@@ -1,13 +1,14 @@
 package graft.ingest
 
 import graft.model.Schemas
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.model.Schemas.{BackendDocument, Update}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Control-file source (SURVEY.md §2 S1–S4): one JSON document announcing
-  * new documents (array) and updates (map document_id → update list),
-  * normalized into two DataFrames.
+  * new documents (array) and updates (map document_id → update list).
+  * [[collectRows]] brings both lists to the driver in one action.
   *
   * The polymorphic `Update.s3_value`/`db_value` (string | object | null,
   * reference fixture `new_and_updated_documents.json:786-1030`) are read
@@ -43,22 +44,35 @@ object ControlFile {
       .schema(pipelineUpdatesSchema)
       .json(path)
 
-  /** S3: one row per new BackendDocument. */
-  def newDocuments(control: DataFrame): DataFrame =
-    control
-      .select(explode(col("new_documents")).as("doc"))
-      .select(col("doc.*"))
+  /** One update element with its polymorphic values as JSON strings. */
+  private val updateJson: Column => Column = u => struct(
+    u.getField("type").as("type"),
+    to_json(u.getField("s3_value")).as("s3_value"),
+    to_json(u.getField("db_value")).as("db_value"))
 
-  /** S4: one row per updated document id, the update list kept grouped
-    * (per-document sequential action semantics, SURVEY.md §2 U1) with the
-    * polymorphic values as JSON strings.
+  /** S3 + S4 on the driver, in one `select` and one `collect`, nothing
+    * cached: every control row's new documents, and its updates as
+    * (document id, update list) in file order, each list kept grouped
+    * (per-document sequential semantics, SURVEY.md §2 U1). Several rows (a
+    * stream batch of several files) flatten in row order; an absent,
+    * `null` or empty list adds nothing.
     */
+  def collectRows(control: DataFrame)
+      : (Seq[BackendDocument], Seq[(String, Seq[Update])]) = {
+    import control.sparkSession.implicits._
+    val rows = control.select(col("new_documents"),
+      transform(map_entries(col("updated_documents")), e => struct(
+        e.getField("key").as("_1"), transform(e.getField("value"), updateJson).as("_2"))))
+      .as[(Option[Seq[BackendDocument]], Option[Seq[(String, Seq[Update])]])]
+      .collect()
+    (rows.flatMap(_._1.getOrElse(Nil)).toSeq, rows.flatMap(_._2.getOrElse(Nil)).toSeq)
+  }
+
+  /** S3 / S4 as relations: one row per new document / updated id. */
+  def newDocuments(control: DataFrame): DataFrame =
+    control.select(explode(col("new_documents")).as("doc")).select(col("doc.*"))
+
   def updatedDocuments(control: DataFrame): DataFrame =
-    control
-      .select(explode(col("updated_documents")).as(Seq("document_id", "updates")))
-      .select(col("document_id"), transform(col("updates"), u => struct(
-        u.getField("type").as("type"),
-        to_json(u.getField("s3_value")).as("s3_value"),
-        to_json(u.getField("db_value")).as("db_value")
-      )).as("updates"))
+    control.select(explode(col("updated_documents")).as(Seq("document_id", "updates")))
+      .select(col("document_id"), transform(col("updates"), updateJson).as("updates"))
 }

@@ -2,20 +2,24 @@ package graft.ingest
 
 import java.time.Instant
 
-import graft.model.Schemas.{BackendDocument, IngestResult, Update, UpdateConfig}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import graft.model.Schemas.{IngestResult, UpdateConfig}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 /** Two-phase ingest driver (SURVEY.md §2 O1–O5, §3.1).
   *
-  * Phase 1 (updates) runs TO COMPLETION before phase 2 (new documents)
-  * starts — the barrier is a correctness property (a new doc and an update
-  * to the same id must not race, reference `main.py:164-229`). Each phase
-  * is one `collect` over one effectful partition stage; per-row
-  * failures become `IngestResult.error` strings and the job always
-  * completes (reference `main.py:184-196,221-227`; exit 0 asserted by
-  * `test_integration.py:440,494`).
+  * One `collect` brings the control rows to the driver
+  * ([[ControlFile.collectRows]]); nothing is cached. Phase 1 (updates)
+  * runs TO COMPLETION before phase 2 (new documents) starts — the barrier
+  * is a correctness property (a new doc and an update to the same id must
+  * not race, reference `main.py:164-229`). Each phase is one shuffle-free
+  * job of one stage: `parallelize` cuts the rows into contiguous slices,
+  * at most one per task slot, run by one effectful `mapPartitions` under
+  * one `collect`; a phase with no rows runs no job. Per-row failures
+  * become `IngestResult.error` strings and the job always completes
+  * (reference `main.py:184-196,221-227`; exit 0 asserted by
+  * `test_integration.py:440,494`). Holding the control rows costs the
+  * driver no more than the one task `multiLine` reads a control file in.
   */
 object IngestJob {
 
@@ -36,77 +40,57 @@ object IngestJob {
       fetcher: Fetcher,
       converter: Converter,
       runTs: Instant): RunReport = {
-    import spark.implicits._
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val sc = spark.sparkContext
+    val conf = new SerializableConfiguration(sc.hadoopConfiguration)
+    val (newDocs, updates) = ControlFile.collectRows(ControlFile.read(
+      spark, s"${cfg.pipelineRoot}/$inputDirPath/$updatesFileName"))
 
-    val controlPath = s"${cfg.pipelineRoot}/$inputDirPath/$updatesFileName"
-    val control = ControlFile.read(spark, controlPath)
-    control.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // released on every exit: a malformed control file or a failed
-    // parser-input write must not leave the cached relation behind in a
-    // long-lived session
-    val (updateReport, newReport) = try {
-      // ---- phase 1: updates ------------------------------------------
-      val updates: Dataset[(String, Seq[Update])] =
-        ControlFile.updatedDocuments(control).as[(String, Seq[Update])]
-          // same lesson as phase 2 (NewDocuments.ingestBatch): the control
-          // file is ONE json file → one input partition, so without this
-          // every document's rename/edit I/O runs serially in a single
-          // task. One row = one document with its grouped actions, so the
-          // per-document sequential semantics (U1) survive any partitioning;
-          // the shuffle moves only ids + update metadata. Measured by the
-          // updates-only soak: 42 → 216 updates/sec at 8 cores.
-          .repartition(spark.sparkContext.defaultParallelism)
-      val updateResults: Dataset[IngestResult] = updates.mapPartitions { rows =>
-        val c = conf.value
-        rows.map { case (documentId, docUpdates) =>
-          try {
-            val actionResults =
-              Updates.updateDocument(documentId, docUpdates, cfg, runTs, c)
-            // faithful report semantics: per-action error lists do NOT fail
-            // the document (reference main.py:184-196 discards them too),
-            // but they must not vanish silently — surface them in the log
-            actionResults.filter(_.error != "[]").foreach { r =>
-              JsonLog.error("updated_document_actions",
-                s"update action '${r.update_type}' on $documentId " +
-                  s"reported errors: ${r.error}",
-                "document_id" -> documentId)
+    // ---- phase 1: updates --------------------------------------------
+    // One row = one document with its grouped actions, so the
+    // per-document sequential semantics (U1) survive any slicing.
+    val updateReport: Seq[IngestResult] = if (updates.isEmpty) Nil else
+      sc.parallelize(updates, math.min(updates.size, sc.defaultParallelism))
+        .mapPartitions { rows =>
+          val c = conf.value
+          rows.map { case (documentId, docUpdates) =>
+            try {
+              val actionResults =
+                Updates.updateDocument(documentId, docUpdates, cfg, runTs, c)
+              // per-action error lists do NOT fail the document (reference
+              // main.py:184-196 discards them too), but they are logged
+              actionResults.filter(_.error != "[]").foreach { r =>
+                JsonLog.error("updated_document_actions",
+                  s"update action '${r.update_type}' on $documentId " +
+                    s"reported errors: ${r.error}",
+                  "document_id" -> documentId)
+              }
+              IngestResult(documentId, "updated", None)
+            } catch {
+              case e: Exception =>
+                IngestResult(documentId, "updated",
+                  Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
             }
-            IngestResult(documentId, "updated", None)
-          } catch {
-            case e: Exception =>
-              IngestResult(documentId, "updated",
-                Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
           }
         }
-      }
-      // the barrier: collect phase-1 results before phase 2 triggers
-      val updateReport = updateResults.collect().toSeq
+        // the barrier: phase-1 results are in before phase 2 starts
+        .collect().toSeq
 
-      // ---- phase 2: new documents ------------------------------------
-      val newReport = NewDocuments
-        .ingestBatch(control, cfg, fetcher, converter, runTs, conf)
-      (updateReport, newReport)
-    } finally control.unpersist()
+    // ---- phase 2: new documents --------------------------------------
+    val newReport = NewDocuments
+      .ingestBatch(spark, newDocs, cfg, fetcher, converter, runTs, conf)
 
     // ---- report (O4/K3): one JSON array, deterministic order --------
     val results = (updateReport ++ newReport).sortBy(r => (r.ingest_type, r.document_id))
     val reportPath =
       s"${cfg.pipelineRoot}/$inputDirPath/reports/ingest/batch_1.json"
     val arr = PyJson.mapper.createArrayNode()
-    results.foreach { r =>
-      val o = arr.addObject()
-      o.put("document_id", r.document_id)
-      o.put("type", r.ingest_type)
-      r.error match {
-        case Some(e) => o.put("error", e)
-        case None => o.putNull("error")
-      }
+    results.foreach { r => // a null error is written as JSON null
+      arr.addObject().put("document_id", r.document_id)
+        .put("type", r.ingest_type).put("error", r.error.orNull)
     }
     Fetcher.withRetry(2) {
       Storage.writeString(reportPath, PyJson.dumps(arr, indent = 2),
-        spark.sparkContext.hadoopConfiguration)
+        sc.hadoopConfiguration)
     }
     RunReport(results, reportPath)
   }

@@ -4,16 +4,17 @@ import java.security.MessageDigest
 import java.time.Instant
 
 import graft.functions.{ContentTypes, FileNames, Slugify}
-import graft.model.{Mappings, Schemas}
-import graft.model.Schemas.BackendDocument
+import graft.model.Mappings
+import graft.model.Schemas.{BackendDocument, IngestResult, UpdateConfig}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 /** New-document pipeline (SURVEY.md §2 P1–P5, C1–C9, K1–K2, §3.2).
   *
   * One effectful `mapPartitions` stage performs download → content-type
   * detection → normalize-to-PDF → content-hash keying → CDN blob store →
-  * parser-input record, one fetcher/converter per partition, and one
-  * `collect` of the report rows is its only action ([[ingestBatch]]).
+  * parser-input record, and one `collect` of the report rows is its only
+  * action: one job, none without documents ([[ingestBatch]]).
   * Every fetch, convert or upload failure becomes the row's error value
   * (reference `main.py:209-227` semantics: the job never dies on a row).
   * The stage is deliberately OUTSIDE Catalyst's expression space so the
@@ -138,40 +139,39 @@ object NewDocuments {
     }
   }
 
-  /** Phase-2 pipeline over a control DataFrame, shared by the batch job
-    * and the streaming foreachBatch, in one effectful `mapPartitions`
-    * under one `collect`. The control file is ONE json file, so one input
-    * partition: the repartition spreads the fetches over every task slot
-    * and moves only document metadata. Each row runs [[processOne]], then
+  /** Phase-2 pipeline over the control file's new documents, shared by
+    * the batch job and the streaming foreachBatch: one Spark job of one
+    * stage, no shuffle. `parallelize` cuts `docs` into contiguous slices,
+    * at most one per task slot, so the fetches spread over the slots; one
+    * effectful `mapPartitions` under one `collect` runs them, and no
+    * documents means no job. Each row runs [[processOne]], then
     * (error-free rows only, skips included) writes its K2 parser input,
     * one pretty-printed JSON at `{pipelineRoot}/{parserInputPrefix}/
     * {document_id}.json` in exact field order (reference
     * `api_client.py:180-193`, `main.py:216-220`). The write sits outside
     * `processOne`'s row-level catch: a write that still fails after its
-    * retries fails the run. Only the three report fields reach the
-    * driver, never the document metadata.
+    * retries fails the run. Only the three report fields come back.
     *
     * Trade-off: nothing is cached between upload and sink, so on a
-    * cluster a task retried after a failed write re-runs its partition's
+    * cluster a task retried after a failed write re-runs its slice's
     * fetch and upload. Content-hash keys make a re-upload overwrite
     * itself (C7/C8); HTML captures are the exception, since every capture
     * yields different bytes and so a second blob.
     */
   def ingestBatch(
-      control: org.apache.spark.sql.DataFrame,
-      cfg: graft.model.Schemas.UpdateConfig,
+      spark: SparkSession,
+      docs: Seq[BackendDocument],
+      cfg: UpdateConfig,
       fetcher: Fetcher,
       converter: Converter,
       runTs: Instant,
-      conf: SerializableConfiguration): Seq[Schemas.IngestResult] = {
-    val spark = control.sparkSession
-    import spark.implicits._
+      conf: SerializableConfiguration): Seq[IngestResult] = {
+    val sc = spark.sparkContext
     val outputLocation = s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}"
-    ControlFile.newDocuments(control).as[BackendDocument]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { docs =>
+    if (docs.isEmpty) Nil else sc.parallelize(docs, math.min(docs.size, sc.defaultParallelism))
+      .mapPartitions { rows =>
         val c = conf.value
-        docs.map { doc =>
+        rows.map { doc =>
           val p = processOne(doc, cfg.documentRoot, fetcher, converter, runTs, c)
           if (p.error.isEmpty) {
             val text = ParserInputJson.render(
@@ -181,7 +181,7 @@ object NewDocuments {
                 s"$outputLocation/${doc.import_id}.json", text, c)
             }
           }
-          Schemas.IngestResult(doc.import_id, "new", p.error)
+          IngestResult(doc.import_id, "new", p.error)
         }
       }
       .collect().toSeq

@@ -3,9 +3,8 @@ package graft.streaming
 import java.time.Instant
 
 import graft.ingest._
-import graft.model.Schemas.{BackendDocument, UpdateConfig}
+import graft.model.Schemas.UpdateConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -17,11 +16,15 @@ import org.apache.spark.util.SerializableConfiguration
   * parser-input records and blobs.
   *
   * Shape: `readStream` (file source, one row per control file) →
-  * `foreachBatch` running the SAME batch stage (explode → one effectful
-  * fetch/upload/parser-input partition stage) — the unified-API pattern
-  * that keeps one implementation for both deployment modes. Updates stay
-  * batch-only: their strict per-document ordering against new-doc
-  * ingestion (SURVEY.md §2 O2) has no streaming analogue in the reference.
+  * `foreachBatch` running the SAME batch code: the batch's rows are
+  * collected once ([[ControlFile.collectRows]], the batch's files'
+  * documents in row order) and [[NewDocuments.ingestBatch]] runs them as
+  * one shuffle-free job of one stage, or none when the batch announces
+  * no new documents — the unified-API pattern that keeps one
+  * implementation for both deployment modes. The driver holds one
+  * batch's control rows at a time. Updates stay batch-only: their strict
+  * per-document ordering against new-doc ingestion (SURVEY.md §2 O2) has
+  * no streaming analogue in the reference.
   */
 object IngestStream {
 
@@ -56,8 +59,9 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val (docs, _) = ControlFile.collectRows(batch)
         val outcomes = NewDocuments.ingestBatch(
-          batch, cfg, fetcher, converter, clock(), conf)
+          spark, docs, cfg, fetcher, converter, clock(), conf)
         System.err.println(s"[ingest-stream] batch $batchId: " +
           s"${outcomes.size} documents, " +
           s"${outcomes.count(_.error.isDefined)} errors")

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import graft.ingest.SparkSpec
 
-/** [[Harness.session]]'s confs, [[Probe.parseArgs]]'s validation, and one
+/** [[Harness.session]]'s confs, [[Probe.parseArgs]]'s validation, and
   * [[Probe.run]] at sf0.001: each rep counts the query's rows, the
-  * listener's job/stage/task counts repeat across reps, and the plan file
-  * holds the physical plan.
+  * listener's job/stage/task counts repeat across reps, the plan file
+  * holds the physical plan, and each stage line names the action's call
+  * site.
   */
 class HarnessSpec extends SparkSpec {
 
@@ -54,5 +55,16 @@ class HarnessSpec extends SparkSpec {
     assert(reps.forall(_.counters.stageLines.size == stages))
     assert(Files.readString(planDir.resolve("q03_join_agg.txt"))
       .contains("== Physical Plan =="))
+  }
+
+  test("Probe labels every q03 stage with its SQL execution, not AQE's pool thread") {
+    assume(Files.isDirectory(Paths.get(sf)), s"$sf is absent")
+    val lines = Probe.run(spark, Probe.Args(Seq("q03_join_agg"), sf, 1, None))
+      .head.counters.stageLines
+    assert(lines.nonEmpty)
+    assert(!lines.exists(_.contains("CompletableFuture")), lines.mkString("\n"))
+    // the query's own stages carry its action's call site; the parquet
+    // footer jobs run outside any SQL execution and keep their own name
+    assert(lines.count(_.contains("count at Probe.scala:")) >= 3, lines.mkString("\n"))
   }
 }

@@ -3,19 +3,16 @@ package graft.ingest
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.time.Instant
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import graft.model.Schemas.{BackendDocument, IngestResult, UpdateConfig}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.util.SerializableConfiguration
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.{Seconds, Span}
 
 object IngestCacheSpec {
   /** The runs here fetch nothing; top-level so it serializes to executors. */
@@ -58,14 +55,24 @@ object IngestCacheSpec {
   val mixedControl: String = Seq(newDoc(1, s"\"$PdfUrl\""), newDoc(2, "\"\""),
     newDoc(3, "\"not a url\""), newDoc(4, "\"https://spec.example/gone.pdf\""))
     .mkString("""{"new_documents": [""", ", ", """], "updated_documents": {}}""")
+
+  /** One document update of an unknown type: a row error, no file I/O. */
+  val unknownUpdate: String =
+    """"SPEC.executive.9.1": [{"type": "no_such_update", "s3_value": null}]"""
+
+  /** The Spark jobs one traced call ran: their stage ids, the names of the
+    * stages that completed, in completion order, and the shuffle bytes
+    * read plus written.
+    */
+  case class Jobs(jobs: Int, stageIds: Int, stageNames: Seq[String], shuffleBytes: Long)
 }
 
-/** Phase 2 runs in one pass: each row uploads and writes its parser
-  * input inside one effectful stage, and one `collect` is the only
-  * action, with nothing cached in between. A failed run must still
-  * release what `IngestJob.run` cached: `IngestStream` runs the same
-  * phases in a long-lived session, where a leaked relation would stay for
-  * the life of the stream.
+/** Each ingest phase is one Spark job of one stage with no shuffle, run
+  * over rows the driver collected once: each row uploads and writes its
+  * parser input inside one effectful stage, one `collect` is the phase's
+  * only action, and a phase with no rows runs no job. Nothing is cached:
+  * `IngestStream` runs the same phases in a long-lived session, where a
+  * leaked relation would stay for the life of the stream.
   */
 class IngestCacheSpec extends SparkSpec {
   import IngestCacheSpec._
@@ -80,6 +87,43 @@ class IngestCacheSpec extends SparkSpec {
 
   private def assertNothingCached(): Unit =
     assert(spark.sharedState.cacheManager.isEmpty, "a cached relation leaked")
+
+  /** Runs `body` under a job group of its own and returns its result with
+    * the jobs that group ran (other callers' jobs are not counted).
+    */
+  private def traced[T](body: => T): (T, Jobs) = {
+    val sc = spark.sparkContext
+    val group = s"spec-${UUID.randomUUID}"
+    val stageIds = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new AtomicLong
+    val names = new ConcurrentLinkedQueue[String]()
+    val shuffle = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stageIds.add)
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (stageIds.contains(s.stageInfo.stageId)) {
+          names.add(s.stageInfo.name)
+          val m = s.stageInfo.taskMetrics
+          shuffle.addAndGet(m.shuffleReadMetrics.totalBytesRead +
+            m.shuffleWriteMetrics.bytesWritten)
+        }
+    }
+    GraftBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ingest spec")
+    try {
+      val result = body
+      GraftBus.drain(sc)
+      (result, Jobs(jobs.get.toInt, stageIds.size, names.asScala.toSeq, shuffle.get))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("a malformed control file fails the run and leaves nothing cached") {
     spark.catalog.clearCache()
@@ -110,58 +154,23 @@ class IngestCacheSpec extends SparkSpec {
     assertNothingCached()
   }
 
-  /** Run [[NewDocuments.ingestBatch]] once over [[mixedControl]] in a
-    * fresh session, so the session's query listener sees only this call.
-    * Returns the report rows, the actions run, and the call site of each
-    * SQL execution that reads this control file.
-    */
-  private def ingestMixed(tmp: Path)
-      : (Seq[IngestResult], Seq[String], Seq[String]) = {
+  /** Run [[NewDocuments.ingestBatch]] once over `docs`, traced. */
+  private def ingestBatch(tmp: Path, docs: Seq[BackendDocument])
+      : (Seq[IngestResult], Jobs) = traced(NewDocuments.ingestBatch(spark, docs,
+    UpdateConfig(s"file://$tmp", s"file://$tmp/cdn"), new MemoryFetcher,
+    new StubConverter, Instant.parse("2024-01-01T00:00:00Z"),
+    new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
+
+  /** [[ingestBatch]] over [[mixedControl]]'s documents. */
+  private def ingestMixed(tmp: Path): (Seq[IngestResult], Jobs) = {
     Files.write(tmp.resolve("control.json"), mixedControl.getBytes(UTF_8))
-    val session = spark.newSession()
-    val control = ControlFile.read(session, s"file://$tmp/control.json")
-    val actions = new ConcurrentLinkedQueue[String]()
-    val actionListener = new QueryExecutionListener {
-      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
-        actions.add(action)
-      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit =
-        actions.add(action)
-    }
-    // a root execution's description is its caller's call site (its
-    // jobs' stage names are not: adaptive execution submits them from a
-    // pool thread)
-    val callSites = new ConcurrentLinkedQueue[String]()
-    val startListener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.rootExecutionId.forall(_ == s.executionId) &&
-              s.physicalPlanDescription.contains(tmp.getFileName.toString) =>
-          callSites.add(s.description)
-        case _ =>
-      }
-    }
-    session.listenerManager.register(actionListener)
-    spark.sparkContext.addSparkListener(startListener)
-    try {
-      val results = NewDocuments.ingestBatch(control,
-        UpdateConfig(s"file://$tmp", s"file://$tmp/cdn"), new MemoryFetcher,
-        new StubConverter, Instant.parse("2024-01-01T00:00:00Z"),
-        new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-      // both listeners share one ordered queue: once the collect is in,
-      // every earlier action and execution start of this call is too
-      eventually(timeout(Span(30, Seconds))) {
-        assert(actions.contains("collect"))
-      }
-      (results, actions.asScala.toSeq, callSites.asScala.toSeq)
-    } finally {
-      spark.sparkContext.removeSparkListener(startListener)
-      session.listenerManager.unregister(actionListener)
-    }
+    ingestBatch(tmp, ControlFile.collectRows(
+      ControlFile.read(spark, s"file://$tmp/control.json"))._1)
   }
 
   test("one pass: report rows, error classes, parser inputs and MD5-keyed upload") {
     val tmp = Files.createTempDirectory("graft-phase2-mixed")
-    val (results, _, _) = ingestMixed(tmp)
+    val (results, _) = ingestMixed(tmp)
     assert(results.sortBy(_.document_id).map(r =>
       (r.document_id, r.ingest_type, r.error.map(_.takeWhile(_ != ':')))) === Seq(
       ("SPEC.executive.1.1", "new", None),
@@ -183,9 +192,8 @@ class IngestCacheSpec extends SparkSpec {
     assert(Files.readAllBytes(uploads.head).sameElements(PdfBytes))
 
     // parser input for exactly the non-error rows, rendered from the row
-    val docs = ControlFile.newDocuments(
-      ControlFile.read(spark, s"file://$tmp/control.json"))
-      .as[BackendDocument](Encoders.product[BackendDocument]).collect()
+    val docs = ControlFile.collectRows(
+      ControlFile.read(spark, s"file://$tmp/control.json"))._1
       .map(d => d.import_id -> d).toMap
     val parserInputs = Files.list(tmp.resolve("parser_input")).iterator()
       .asScala.map(p => p.getFileName.toString -> Files.readString(p)).toMap
@@ -198,11 +206,57 @@ class IngestCacheSpec extends SparkSpec {
   }
 
   test("one ingestBatch call runs exactly one action: a collect in NewDocuments.scala") {
-    val (_, actions, callSites) =
-      ingestMixed(Files.createTempDirectory("graft-phase2-actions"))
-    assert(actions === Seq("collect"))
-    assert(callSites.size === 1, callSites)
-    assert(callSites.head.matches("collect at NewDocuments\\.scala:\\d+"),
-      callSites)
+    val tmp = Files.createTempDirectory("graft-phase2-actions")
+    val (results, jobs) = ingestMixed(tmp)
+    assert(results.size === 4)
+    assert((jobs.jobs, jobs.stageIds, jobs.shuffleBytes) === ((1, 1, 0L)), jobs)
+    assert(jobs.stageNames.size === 1, jobs)
+    assert(jobs.stageNames.head.matches("collect at NewDocuments\\.scala:\\d+"), jobs)
+
+    val (none, noJobs) = ingestBatch(tmp, Nil)
+    assert(none.isEmpty)
+    assert(noJobs === Jobs(0, 0, Nil, 0L))
+  }
+
+  test("a run is one control collect plus one job per phase with rows") {
+    val news = s"""[$skippedDoc]"""
+    val updates = s"""{$unknownUpdate}"""
+    val cases = Seq(
+      ("updates only", s"""{"new_documents": [], "updated_documents": $updates}""",
+        Seq("ControlFile", "IngestJob")),
+      ("new only", s"""{"new_documents": $news, "updated_documents": {}}""",
+        Seq("ControlFile", "NewDocuments")),
+      ("mixed", s"""{"new_documents": $news, "updated_documents": $updates}""",
+        Seq("ControlFile", "IngestJob", "NewDocuments")),
+      ("empty", """{"new_documents": [], "updated_documents": {}}""",
+        Seq("ControlFile")))
+    for ((name, control, sites) <- cases) {
+      val tmp = Files.createTempDirectory("graft-run-jobs")
+      val (report, jobs) = traced(run(tmp, control))
+      assert(jobs.jobs === sites.size, name)
+      assert(jobs.stageIds === sites.size, name)
+      assert(jobs.shuffleBytes === 0L, name)
+      // in order: phase 1 has finished before phase 2's job starts
+      assert(jobs.stageNames.map(_.replaceAll("^collect at (\\w+)\\.scala:\\d+$", "$1")) ===
+        sites, name)
+      assert(report.results.map(_.ingest_type).distinct.sorted ===
+        sites.collect { case "IngestJob" => "updated"; case "NewDocuments" => "new" }
+          .sorted, name)
+    }
+  }
+
+  test("a stream batch of two control files ingests both files' new documents") {
+    val tmp = Files.createTempDirectory("graft-stream-batch")
+    Files.createDirectories(tmp.resolve("incoming"))
+    for (n <- Seq(1, 2)) Files.write(tmp.resolve(s"incoming/c$n.json"),
+      s"""{"new_documents": [${newDoc(n, "null")}], "updated_documents": {$unknownUpdate}}"""
+        .getBytes(UTF_8))
+    graft.streaming.IngestStream.start(spark,
+      UpdateConfig(s"file://$tmp", s"file://$tmp/cdn"), "incoming/*.json",
+      s"$tmp/ckpt", new NoFetcher, new StubConverter,
+      () => Instant.parse("2024-01-01T00:00:00Z")).awaitTermination()
+    assert(Files.list(tmp.resolve("parser_input")).iterator().asScala
+      .map(_.getFileName.toString).toSet ===
+      Set("SPEC.executive.1.1.json", "SPEC.executive.2.1.json"))
   }
 }
