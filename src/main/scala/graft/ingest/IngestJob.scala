@@ -18,8 +18,8 @@ import org.apache.spark.util.SerializableConfiguration
   * one `collect`; a phase with no rows runs no job. Per-row failures
   * become `IngestResult.error` strings and the job always completes
   * (reference `main.py:184-196,221-227`; exit 0 asserted by
-  * `test_integration.py:440,494`). Holding the control rows costs the
-  * driver no more than the one task `multiLine` reads a control file in.
+  * `test_integration.py:440,494`). Trade-off: the driver holds the control
+  * rows, as the one task that `multiLine` reads a whole file in already did.
   */
 object IngestJob {
 
