@@ -5285,7 +5285,7 @@ object SparkEntry {
 
     // Two-sample exact Wasserstein-1 (q412): en vs de token-count
     // histograms through the SAME core as q407's group-vs-rest (and
-    // the streaming DriftStream.w1Batches path) — the snapshot-vs-
+    // a stream's per-batch Streams.perBatch scoring) — the snapshot-vs-
     // snapshot drift number, one row.
     "q412_w1_two_sample" -> ((s, dir) => {
       val d = T(s, dir, "documents")

@@ -34,14 +34,21 @@ object ControlFile {
       )))))
   ))
 
-  /** Load + validate the control file (S1/S2). FAILFAST ≈ the reference's
-    * strict `PipelineUpdates.model_validate` (`utils.py:31`).
+  /** Reader settings of both reads, with [[pipelineUpdatesSchema]]: one
+    * JSON document per file, and FAILFAST ≈ the reference's strict
+    * `PipelineUpdates.model_validate` (`utils.py:31`) — a malformed
+    * control file fails loudly instead of reading (or, on a stream,
+    * being checkpoint-committed) as 0 documents.
     */
+  private val readerOptions = Map("multiLine" -> "true", "mode" -> "FAILFAST")
+
+  /** Load + validate the control file (S1/S2). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("multiLine", true)
-      .option("mode", "FAILFAST")
-      .schema(pipelineUpdatesSchema)
+    spark.read.options(readerOptions).schema(pipelineUpdatesSchema).json(path)
+
+  /** [[read]] as a file stream: one row per arriving control file. */
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream.options(readerOptions).schema(pipelineUpdatesSchema)
       .json(path)
 
   /** One update element with its polymorphic values as JSON strings. */

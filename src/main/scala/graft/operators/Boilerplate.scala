@@ -152,10 +152,10 @@ object Boilerplate {
     * index ([[duplicatedLineIndex]] output, or any (line) frame) —
     * the incremental/streaming form: a delta batch is cleaned against
     * yesterday's corpus index without re-counting corpus frequencies
-    * (the `UrlDedup.flagAgainstIndex` convention; run inside
-    * `foreachBatch` for a streaming delta — the per-doc rebuild is a
-    * doc-grain aggregation, legal there and batch-identical). Same
-    * output contract as [[removeDuplicatedLines]].
+    * (the `UrlDedup.flagAgainstIndex` convention; run it through
+    * [[graft.streaming.Streams.perBatch]] for a streaming delta — the
+    * per-doc rebuild is a doc-grain aggregation, legal there and
+    * batch-identical). Same output contract as [[removeDuplicatedLines]].
     */
   def removeLinesAgainstIndex(delta: DataFrame, index: DataFrame,
       idCol: String, textCol: String): DataFrame = {

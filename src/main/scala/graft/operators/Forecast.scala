@@ -179,7 +179,9 @@ object Forecast {
     * slots stay calendar-true because they derive from each point's
     * own `t`. Left fold ⇒ `resume(state(A), B) == state(A ++ B)`
     * EXACTLY (spec'd). Idle keys pass through; debut keys take the
-    * classic init over their own points.
+    * classic init over their own points. Streamed under the
+    * [[holtLinearFrom]] fold, with [[holtWintersState]] as the first
+    * step (ForecastStreamSpec).
     */
   def holtWintersFrom(df: DataFrame, keyCol: String, tCol: String,
       valueCol: String, state: DataFrame, period: Int, alpha: Double,
@@ -241,7 +243,11 @@ object Forecast {
     * .SkippingManifest.merge]] contract for sequential state). Keys
     * with no new points pass through unchanged; NEW keys (no state)
     * get the classic [[holtLinear]] init. Output feeds back in as the
-    * next state.
+    * next state. Streamed: a [[graft.streaming.Streams.fold]] whose
+    * first batch runs [[holtLinear]] and every later batch resumes here
+    * ends in the whole-history state (ForecastStreamSpec), provided
+    * batches arrive in event-time order per key and a key's first batch
+    * carries ≥ 2 points (a 1-point debut is dropped by [[holtLinear]]).
     */
   def holtLinearFrom(df: DataFrame, keyCol: String, tCol: String,
       valueCol: String, state: DataFrame, alpha: Double, beta: Double,

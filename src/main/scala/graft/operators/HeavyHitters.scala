@@ -168,8 +168,12 @@ object HeavyHitters {
   /** Pure merge of two finished MG summaries (item → clipped count)
     * at capacity k — the Mergeable Summaries rule on plain maps, for
     * folding per-shard/per-batch summaries OUTSIDE an aggregation
-    * (the streaming consumer's fold; SketchStream.misraGriesBatches).
-    * Same band/superset guarantees as [[MisraGriesAgg.merge]].
+    * (the streaming consumer's fold: [[summarize]] per micro-batch
+    * folded through [[graft.streaming.Streams.fold]]). Same
+    * band/superset guarantees as [[MisraGriesAgg.merge]]; exact
+    * equality with the whole-stream summary is NOT the contract, since
+    * MG is order-dependent below the guarantee (SketchStreamSpec pins
+    * the guarantee itself).
     */
   def mergeSummaries(a: Map[String, Long], b: Map[String, Long],
       k: Int): Map[String, Long] = {

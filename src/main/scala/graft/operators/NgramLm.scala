@@ -87,9 +87,8 @@ object NgramLm {
     * occurrence) with its smoothed ln-prob `lp` — explode + the two
     * un-hinted count-table equi-joins, NO aggregation. Safe on a
     * STREAMING frame as-is (the joins become stream-static, carry no
-    * state, and need no watermark — see
-    * [[graft.streaming.LmStream]]); the per-doc reduction lives in
-    * [[logProbScore]].
+    * state, and need no watermark; LmStreamSpec pins batch-identity);
+    * the per-doc reduction lives in [[logProbScore]].
     */
   def scoredGrams(docs: DataFrame, idCol: String, textCol: String,
       lm: Lm, alpha: Double = 0.4,
@@ -124,6 +123,14 @@ object NgramLm {
     * rounded to 4 decimals). Documents below `lm.n` tokens have no
     * n-grams and emit no row — score them with lower-order statistics
     * or drop them in quality filtering upstream.
+    *
+    * On a stream, run it per micro-batch through
+    * [[graft.streaming.Streams.perBatch]]: scores are batch-identical
+    * provided each document's text arrives whole in one batch (documents
+    * are rows, not token streams). A streaming `groupBy(doc)` is the
+    * wrong shape: in append mode an un-windowed per-doc aggregation
+    * never emits (no watermark closes a doc id), and update mode emits
+    * partial averages.
     */
   def logProbScore(docs: DataFrame, idCol: String, textCol: String,
       lm: Lm, alpha: Double = 0.4,
@@ -191,7 +198,7 @@ object NgramLm {
     * bigram occurrence) with its interpolated-KN ln-prob `lp` —
     * explode + three un-hinted count-table equi-joins, no aggregation,
     * so the same Column program runs on a STREAMING frame unchanged
-    * ([[graft.streaming.LmStream.knScoredGrams]]).
+    * (LmStreamSpec).
     *
     * The probability, with fixed discount `d` (default 0.75 — exact in
     * binary, so `c2 − d` is one exact double subtraction):

@@ -50,8 +50,10 @@ object Packing {
     * `startOffset` places the first token of this corpus at a global
     * stream position > 0 — the incremental form: packing shard k of an
     * id-ordered corpus with the token total of shards < k as the
-    * offset yields exactly the spans whole-corpus packing would (the
-    * [[graft.streaming.PackStream]] carry; spec'd batch-identical).
+    * offset yields exactly the spans whole-corpus packing would. On an
+    * id-ordered stream the offset is the one long a
+    * [[graft.streaming.Streams.fold]] carries: each batch packs at it
+    * and advances it by `sum(doc_to − doc_from)` (PackStreamSpec).
     */
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
       seqLen: Int, tokensCol: Option[String] = None,

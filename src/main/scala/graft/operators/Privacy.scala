@@ -171,16 +171,18 @@ object Privacy {
   /** The inverse-CDF walk as a Column: `u` holds the uniform's 64-bit
     * pattern in a signed long; comparisons shift both sides by 2^63
     * (XOR with Long.MinValue) so signed order equals unsigned order.
-    * A when-chain over the literal table — pure codegen.
+    * The table is strictly increasing, so "the first x with u < T(x),
+    * else cap" is the count of thresholds ≤ u, minus cap: one lookup
+    * over ONE array literal, whose generated code stays small at any
+    * cap (a 2·cap-branch `when` chain outgrows the 64 KB method limit
+    * at cap 60, and Spark then runs the stage interpreted).
     */
-  private def geometricNoise(u: Column, table: IndexedSeq[BigInt]): Column = {
+  private[graft] def geometricNoise(u: Column,
+      table: IndexedSeq[BigInt]): Column = {
     val cap = table.size / 2
     val shifted = u.bitwiseXOR(lit(Long.MinValue))
-    val ts = table.map(t => t.longValue ^ Long.MinValue)
-    val first = when(shifted < lit(ts.head), lit(-cap))
-    (1 until 2 * cap).foldLeft(first) { (acc, j) =>
-      acc.when(shifted < lit(ts(j)), lit(j - cap))
-    }.otherwise(lit(cap)).cast("long")
+    val ts = typedLit(table.map(t => t.longValue ^ Long.MinValue).toArray)
+    (size(filter(ts, t => t <= shifted)) - cap).cast("long")
   }
 
   /** ε = ln 2 differentially-private group counts (geometric mechanism,

@@ -82,7 +82,10 @@ object QuantileSketch {
   /** Merge two register tables built over DISJOINT row shards:
     * bottom-k of the union, the [[Sketches.kmvMerge]] law. Associative
     * and commutative, so any shard tree folds to the sketch the whole
-    * corpus would build — the streaming/backfill contract (spec'd
+    * corpus would build — the streaming/backfill contract: folding
+    * each micro-batch's [[sampleRegistersBy]] through
+    * [[graft.streaming.Streams.fold]] keeps k (hash, value) rows per key
+    * forever, readable at any time with [[sampleQuantilesBy]] (spec'd
     * batch ≡ folded in SketchStreamSpec).
     */
   def sampleMerge(a: DataFrame, b: DataFrame, k: Int): DataFrame = {

@@ -586,7 +586,10 @@ object Robust {
     * [[ewmaControl]]. Given the pinned limits the walk is a pure left
     * fold, so `resume(resume(st, B1), B2) == resume(st, B1 ++ B2)`
     * EXACTLY (spec'd) — the [[Forecast.holtLinearFrom]] law, with
-    * calibration pinning instead of full-history equivalence.
+    * calibration pinning instead of full-history equivalence. Streamed:
+    * a [[graft.streaming.Streams.fold]] whose first batch calibrates
+    * through [[ewmaControl]] and every later batch resumes here
+    * (ControlStreamSpec).
     */
   def ewmaControlFrom(df: DataFrame, keyCol: String, tCol: String,
       valueCol: String, state: DataFrame, lambda: Double,

@@ -73,7 +73,12 @@ object Sketches {
   }
 
   /** Cell-wise sum of two sketches built with the SAME (depth, width) —
-    * the shard-merge that makes per-executor sketching compose.
+    * the shard-merge that makes per-executor sketching compose, and the
+    * streaming fold: each micro-batch's [[countMinBuild]] folded with
+    * this merge through [[graft.streaming.Streams.fold]] keeps a state
+    * of a few KB that is cell-identical to the sketch of the whole
+    * stream (spec'd in SketchStreamSpec). The same holds for
+    * [[hllMerge]], [[logHistMerge]] and [[kmvMerge]] over their builds.
     */
   def countMinMerge(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b)
@@ -290,7 +295,8 @@ object Sketches {
   }
 
   /** Bucket-wise sum of two histograms (shard merge — exact, order-
-    * free, associative; the same contract as [[countMinMerge]]).
+    * free, associative; the same contract as [[countMinMerge]], so a
+    * stream fold of [[logHistBuild]] keeps ≤ maxBits + 1 rows forever).
     * UNGROUPED histograms only — merging [[logHistBuildBy]] tables
     * through this would collapse the group key; use [[logHistMergeBy]].
     */

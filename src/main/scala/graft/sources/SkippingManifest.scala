@@ -36,7 +36,10 @@ object SkippingManifest {
     * arithmetic — history is NEVER rescanned (the
     * [[graft.operators.Dedup.appendToIndex]] delta-fold contract,
     * applied to layout stats): `merge(build(A), build(B)) ==
-    * build(A ∪ B)` exactly, spec'd in SkippingManifestSpec.
+    * build(A ∪ B)` exactly, spec'd in SkippingManifestSpec. A
+    * [[graft.streaming.Streams.fold]] of per-batch [[build]]s with this
+    * merge is a continuously maintained layout-stats table
+    * (SketchStreamSpec).
     */
   def merge(a: DataFrame, b: DataFrame, shardCol: String,
       statCols: Seq[String]): DataFrame = {

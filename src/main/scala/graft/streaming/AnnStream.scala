@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
   * the static side's file listing (and the centroid sidecar read here)
   * are captured ONCE at query start — an in-place overwrite rebuild
   * leaves the running query reading deleted/stale files, so RESTART the
-  * query after a rebuild, or use [[indexMatchesRefreshing]], which
-  * re-resolves the sidecar and file listing per micro-batch.
+  * query after a rebuild, or run [[indexMatches]] per micro-batch
+  * through [[Streams.perBatch]]: on a BATCH frame it replans from
+  * scratch (fresh sidecar, fresh file listing), so a nightly rebuild is
+  * picked up at the next batch without a restart, for one sidecar read
+  * and one file listing per batch (AnnStreamSpec pins it).
   */
 object AnnStream {
 
@@ -110,7 +113,10 @@ object AnnStream {
     * probe's (spec'd). The forward-margin best-match selection is a
     * per-x top-k window — impossible on a pure stream — so consumers
     * either feed these candidates to a downstream batch margin job
-    * or run [[bitextProbeRefreshing]] for complete per-batch mining.
+    * or run the FULL batch probe ([[Similarity.bitextProbeIndexed]] —
+    * pruned lists scan, forward margins, best match per x) per
+    * micro-batch through [[Streams.perBatch]]: exactly what the batch
+    * operator emits for that batch's rows, index rebuilds included.
     * The at-least-once multi-list contract of [[indexMatches]]
     * applies ONLY across restarts (within one batch a pair meets in
     * at most one list — an indexed vector lives in exactly one).
@@ -123,52 +129,4 @@ object AnnStream {
         pruneLists = false)
       .filter(col("cos") >= minCos)
       .withColumnRenamed("x", idCol)
-
-  /** The complete per-batch bitext mining — [[bitextCandidates]]'
-    * `foreachBatch` sibling (the [[indexMatchesRefreshing]] pattern):
-    * each micro-batch runs the FULL batch probe
-    * ([[Similarity.bitextProbeIndexed]] — literal-isin pruned lists
-    * scan, forward margins, best match per x), so the sink receives
-    * exactly what the batch operator would emit for that batch's
-    * rows, and a nightly index rebuild is picked up at the next
-    * batch (fresh sidecar + file listing per batch).
-    */
-  def bitextProbeRefreshing(vectors: DataFrame, indexPath: String,
-      idCol: String, vecCol: String, k: Int, nAssign: Int = 2)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        sink(Similarity.bitextProbeIndexed(batch.sparkSession,
-          indexPath, batch, idCol, vecCol, k, nAssign), batchId)
-    }
-
-  /** The rebuild-tolerant deployment of [[indexMatches]]: a
-    * `foreachBatch` writer that re-resolves the ENTIRE static side —
-    * centroid sidecar and list files — per micro-batch, so a nightly
-    * index rebuild (an overwrite of `indexPath`) is picked up at the
-    * next batch without restarting the query (the plain stream-static
-    * join cannot do this: its file listing and sidecar are captured at
-    * query start). Cost per batch: one sidecar read + one file listing —
-    * noise against the batch join itself.
-    *
-    * `sink(matches, batchId)` receives the matched pairs of each batch
-    * (same schema as [[indexMatches]]); start the returned writer to
-    * run the query.
-    */
-  def indexMatchesRefreshing(vectors: DataFrame, indexPath: String,
-      idCol: String, vecCol: String, threshold: Double, nProbe: Int = 1)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        // indexMatches on a BATCH frame replans from scratch: fresh
-        // sidecar, fresh InMemoryFileIndex — the whole point
-        sink(indexMatches(batch, indexPath, idCol, vecCol, threshold,
-          nProbe), batchId)
-    }
 }

@@ -1,39 +1,33 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming fold of [[graft.operators.Robust.poissonBursts]]: each
-  * micro-batch reduces to (key, period, n) count partials, the
-  * consumer merges by summing per (key, period) and PRUNES to the
-  * trailing `keepPeriods` periods per key (the watermark-like
-  * horizon that bounds state — a period arriving after its horizon
-  * is dropped, the [[DedupStream]] trade), and [[score]] replays the
-  * batch operator's arithmetic over that bounded state. Folded
-  * counts ≡ batch counts while periods stay inside the horizon, so
-  * stream scores equal batch scores exactly (spec'd).
+  * micro-batch reduces to (key, period, n) count partials
+  * ([[counts]]), a [[Streams.fold]] with [[merge]] sums them per
+  * (key, period) and PRUNES to the trailing `keepPeriods` periods per
+  * key (the watermark-like horizon that bounds state — a period
+  * arriving after its horizon is dropped, the [[DedupStream]] trade),
+  * and [[score]] replays the batch operator's arithmetic over that
+  * bounded state. Folded counts ≡ batch counts while periods stay
+  * inside the horizon, so stream scores equal batch scores exactly
+  * (spec'd).
   */
 object BurstStream {
 
   case class PeriodCount(key: String, period: Long, n: Long)
 
-  /** Per-micro-batch count partials: `sink(partials, batchId)`. */
-  def countBatches(items: DataFrame, keyCol: String, periodCol: String)(
-      sink: (Seq[PeriodCount], Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val parts = batch.toDF()
-          .groupBy(col(keyCol).cast("string").as("k"),
-            col(periodCol).cast("long").as("p"))
-          .agg(count(lit(1)).as("n"))
-          .collect()
-          .map(r => PeriodCount(r.getString(0), r.getLong(1),
-            r.getLong(2)))
-          .toSeq
-        sink(parts, batchId)
-    }
+  /** Count partials of one (micro-)batch, collected to the driver. */
+  def counts(batch: DataFrame, keyCol: String, periodCol: String)
+      : Seq[PeriodCount] =
+    batch
+      .groupBy(col(keyCol).cast("string").as("k"),
+        col(periodCol).cast("long").as("p"))
+      .agg(count(lit(1)).as("n"))
+      .collect()
+      .map(r => PeriodCount(r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSeq
 
   /** Merge partials into running state and prune each key to its
     * trailing `keepPeriods` periods.

@@ -8,20 +8,18 @@ import org.apache.spark.sql.functions._
 /** Streaming classifier-gated ingest: documents arrive as a stream and
   * score against a TRAINED static [[NbModel]] — the "accept/route on
   * arrival" half of classifier-based quality filtering, the NB analogue
-  * of [[LmStream]]'s trained-LM story and the same two deployment
-  * shapes:
+  * of the trained-LM story ([[graft.operators.NgramLm.scoredGrams]]),
+  * with the same two deployment shapes:
   *
   *  - [[tokenLlrRows]] — completely STATELESS: explode + ONE
   *    stream-static equi-join against the trained llr table, one row
   *    per token occurrence with its llr contribution. No watermark, no
   *    state store.
-  *  - [[scores]] — per-doc verdicts via `foreachBatch`: each
-  *    micro-batch runs the batch operator verbatim, so results are
-  *    batch-identical provided each document arrives whole in one
-  *    batch (the row-per-document ingest contract; see
-  *    [[LmStream.logProbScores]] for why a streaming per-doc agg was
-  *    rejected — an un-windowed doc aggregation either never emits in
-  *    append mode or emits partial scores in update mode).
+  *  - per-doc verdicts: [[QualityClassifier.score]] per micro-batch
+  *    through [[Streams.perBatch]], batch-identical provided each
+  *    document arrives whole in one batch (the row-per-document ingest
+  *    contract; see [[graft.operators.NgramLm.logProbScore]] for why a
+  *    streaming per-doc aggregation is the wrong shape).
   */
 object ClassifierStream {
 
@@ -38,19 +36,4 @@ object ClassifierStream {
       .join(model.llr, Seq("token"), "left")
       .select(col(idCol), col("token"),
         coalesce(col("llr"), lit(model.oovLlr)).as("llr"))
-
-  /** Per-document (score, predicted) over a stream via `foreachBatch`:
-    * `sink(scored, batchId)` receives [[QualityClassifier.score]] of
-    * each micro-batch. Start the returned writer to run the query.
-    */
-  def scores(docs: DataFrame, idCol: String, textCol: String,
-      model: NbModel)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        sink(QualityClassifier.score(batch, idCol, textCol, model),
-          batchId)
-    }
 }

@@ -12,19 +12,24 @@ import org.apache.spark.sql.functions._
   * change shape" alarm. A JS jump on one batch is a feed regression the
   * moment it lands, not after the next full-corpus profile.
   *
-  * `foreachBatch` for the [[SketchStream]] reason: the score is a
-  * table-valued reduction per batch (one row), and the caller owns both
-  * the reference table and what to do with the alarm. The reference is
-  * re-used across batches as a plain DataFrame — Spark re-evaluates it
-  * per batch, so pass something cheap (a persisted count table or a
-  * parquet-backed profile, NOT a raw-corpus derivation).
+  * Per batch: [[Divergence.divergence]] (smoothed KL/JS) of
+  * [[tokenCounts]], or [[Divergence.wasserstein1]] of [[valueCounts]],
+  * against the frozen reference through [[Streams.perBatch]]: the
+  * score is a table-valued reduction per batch (one row), and the
+  * caller owns both the reference table and what to do with the alarm.
+  * The reference is re-used across batches as a plain DataFrame —
+  * Spark re-evaluates it per batch, so pass something cheap (a
+  * persisted count table or a parquet-backed profile, NOT a raw-corpus
+  * derivation). W1 is the GEOMETRY-aware companion to KL/JS: a batch
+  * whose lengths all shifted +50 tokens moves W1 by exactly 50 while
+  * JS only says "different".
   *
-  * The cumulative form additionally folds each batch's counts into a
-  * running count table handed back to the caller — count tables merge
-  * by token-wise sum (the [[Sketches]] fold discipline), so
-  * "distribution of everything seen so far vs reference" needs only
-  * vocabulary-sized state, and the fold is spec'd identical to scoring
-  * the whole stream as one batch.
+  * Cumulative: a [[Streams.fold]] of each batch's counts with
+  * [[mergeCounts]] — count tables merge by token-wise sum (the
+  * [[graft.operators.Sketches]] fold discipline), so "distribution of
+  * everything seen so far vs reference" needs only vocabulary-sized
+  * state, and the fold is spec'd identical to counting the whole
+  * stream as one batch.
   */
 object DriftStream {
 
@@ -46,23 +51,6 @@ object DriftStream {
       .groupBy(col("token"))
       .agg(sum(col("c")).as("c"))
 
-  /** Per-micro-batch drift scores: `sink(score, batchId)` receives the
-    * one-row `(n_p, n_q, kl_p_q, js)` of THIS batch's counts vs the
-    * frozen `reference` count table. Start the returned writer to run
-    * the query.
-    */
-  def driftBatches(docs: DataFrame, textCol: String,
-      reference: DataFrame, alpha: Double = 0.5)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        sink(Divergence.divergence(tokenCounts(batch, textCol),
-          reference, "token", "c", alpha), batchId)
-    }
-
   /** Value histogram of a static or micro-batch frame over an
     * integer-grid metric — the shape [[Divergence.wasserstein1]]
     * consumes (and [[mergeCounts]] folds, after renaming `v` to the
@@ -74,23 +62,4 @@ object DriftStream {
       .select(col(valueCol).cast("long").as("v"))
       .groupBy(col("v"))
       .agg(count(lit(1)).as("c"))
-
-  /** Per-micro-batch Wasserstein-1 vs a FROZEN reference histogram —
-    * the GEOMETRY-aware companion to [[driftBatches]]' KL/JS (a batch
-    * whose lengths all shifted +50 tokens moves W1 by exactly 50
-    * while JS only says "different"): `sink(score, batchId)` receives
-    * the one-row `(n_p, n_q, w1)` of this batch's metric histogram vs
-    * `reference` (a `(v, c)` table — pass something cheap, the
-    * [[driftBatches]] reference contract).
-    */
-  def w1Batches(df: DataFrame, valueCol: String,
-      reference: DataFrame)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        sink(Divergence.wasserstein1(valueCounts(batch, valueCol),
-          reference, "v", "c"), batchId)
-    }
 }

@@ -4,7 +4,7 @@ import java.time.Instant
 
 import graft.ingest._
 import graft.model.Schemas.UpdateConfig
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -15,10 +15,11 @@ import org.apache.spark.util.SerializableConfiguration
   * once (file-source checkpointing), writing the same per-document
   * parser-input records and blobs.
   *
-  * Shape: `readStream` (file source, one row per control file) →
-  * `foreachBatch` running the SAME batch code: the batch's rows are
-  * collected once ([[ControlFile.collectRows]], the batch's files'
-  * documents in row order) and [[NewDocuments.ingestBatch]] runs them as
+  * Shape: [[ControlFile.readStream]] (file source, one row per control
+  * file, the batch read's settings) → [[Streams.perBatch]] running the
+  * SAME batch code: the batch's rows are collected once
+  * ([[ControlFile.collectRows]], the batch's files' documents in row
+  * order) and [[NewDocuments.ingestBatch]] runs them as
   * one shuffle-free job of one stage, or none when the batch announces
   * no new documents — the unified-API pattern that keeps one
   * implementation for both deployment modes. The driver holds one
@@ -47,26 +48,18 @@ object IngestStream {
       clock: () => Instant = () => Instant.now(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val control = spark.readStream
-      .schema(ControlFile.pipelineUpdatesSchema)
-      .option("multiLine", true)
-      // strict like the batch path: a malformed control file must fail
-      // the batch loudly, not be checkpoint-committed as 0 documents
-      .option("mode", "FAILFAST")
-      .json(s"${cfg.pipelineRoot}/$inputGlob")
-
-    control.writeStream
+    val control =
+      ControlFile.readStream(spark, s"${cfg.pipelineRoot}/$inputGlob")
+    Streams.perBatch(control) { batch =>
+      NewDocuments.ingestBatch(spark, ControlFile.collectRows(batch)._1,
+        cfg, fetcher, converter, clock(), conf)
+    } { (outcomes, batchId) =>
+      System.err.println(s"[ingest-stream] batch $batchId: " +
+        s"${outcomes.size} documents, " +
+        s"${outcomes.count(_.error.isDefined)} errors")
+    }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (docs, _) = ControlFile.collectRows(batch)
-        val outcomes = NewDocuments.ingestBatch(
-          spark, docs, cfg, fetcher, converter, clock(), conf)
-        System.err.println(s"[ingest-stream] batch $batchId: " +
-          s"${outcomes.size} documents, " +
-          s"${outcomes.count(_.error.isDefined)} errors")
-        ()
-      }
       .start()
   }
 }

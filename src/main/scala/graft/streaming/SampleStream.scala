@@ -8,28 +8,13 @@ import org.apache.spark.sql.functions._
   * [[Sampling.weightedSampleWithoutReplacement]], exact by the A-ES
   * fold property: each row's exponential key −ln(u)/w is a pure
   * function of (id, weight), so "k smallest keys of the whole stream"
-  * = "k smallest of (previous reservoir ∪ new batch)". The consumer
-  * folds per-batch candidate sets with [[merge]] and the reservoir
-  * state is k rows forever — no watermark, no state store, and the
-  * result is IDENTICAL to the batch sample of everything seen
-  * (SampleStreamSpec pins it).
+  * = "k smallest of (previous reservoir ∪ new batch)". A
+  * [[Streams.fold]] of each batch's own k-smallest-key rows (the batch
+  * operator itself) with [[merge]] keeps a reservoir of k rows forever
+  * — no watermark, no state store, and the result is IDENTICAL to the
+  * batch sample of everything seen (SampleStreamSpec pins it).
   */
 object SampleStream {
-
-  /** Per-micro-batch candidates: `sink(sample, batchId)` receives the
-    * batch's own k-smallest-key rows (id, weight, sample_key). Fold
-    * with [[merge]]. Start the returned writer to run the query.
-    */
-  def weightedCandidates(items: DataFrame, idCol: String,
-      weightCol: String, k: Int)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        sink(Sampling.weightedSampleWithoutReplacement(
-          batch, idCol, weightCol, k), batchId)
-    }
 
   /** The reservoir fold: k smallest keys of the union — associative,
     * commutative, and idempotent in the candidate sets, so batch

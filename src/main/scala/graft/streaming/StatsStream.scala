@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * length mass; exact NDV is not mergeable and stays batch-side /
   * HLL), and [[merge]] folds partials into the running catalog row —
   * associative + commutative, so any batch split lands on the same
-  * catalog. State at the consumer is O(columns); the
-  * `foreachBatch`-sink shape is the [[SketchStream]] contract.
+  * catalog. State at the consumer is O(columns): a [[Streams.fold]]
+  * that merges each batch's collected partials into the running rows.
   */
 object StatsStream {
 
@@ -75,17 +75,4 @@ object StatsStream {
     mergeOpt(a.min_str, b.min_str)((x, y) => if (x <= y) x else y),
     mergeOpt(a.max_str, b.max_str)((x, y) => if (x >= y) x else y),
     mergeOpt(a.len_sum, b.len_sum)(_ + _))
-
-  /** Per-micro-batch catalog partials: `sink(partials, batchId)`
-    * receives one [[ColStats]] row per column of each batch — fold
-    * with [[merge]] for the running catalog.
-    */
-  def statsBatches(items: DataFrame)(
-      sink: (Seq[ColStats], Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(partials(batch.toDF()).collect().toSeq, batchId)
-    }
 }

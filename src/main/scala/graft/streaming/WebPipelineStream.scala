@@ -70,8 +70,8 @@ object WebPipelineStream {
     * static) with ONE stream-static LEFT ANTI join. Emits the KEPT
     * lines (stateless append — a per-doc string rebuild would need a
     * doc-grain aggregation, which an un-windowed append stream never
-    * emits; downstream either consumes line-grain or reassembles in
-    * `foreachBatch` via
+    * emits; downstream either consumes line-grain or reassembles per
+    * micro-batch ([[Streams.perBatch]]) via
     * [[graft.operators.Boilerplate.removeLinesAgainstIndex]], which
     * is batch-identical by the shared join device).
     */

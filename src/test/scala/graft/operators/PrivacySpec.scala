@@ -78,6 +78,45 @@ class PrivacySpec extends SparkSpec {
     }
   }
 
+  test("noisySums at cap 60 runs with spark.sql.codegen.fallback off: " +
+      "its whole-stage code compiles") {
+    val s = spark
+    import s.implicits._
+    val df = (0 until 40).map(u => (s"g${u % 4}", s"u$u", 2.5))
+      .toDF("grp", "unit", "v")
+    val key = "spark.sql.codegen.fallback"
+    val prior = s.conf.getOption(key)
+    s.conf.set(key, "false")
+    try {
+      val out = Privacy.noisySums(df, Seq("grp"), "unit", "v",
+        clip = 10L, seed = 3L, cap = 60).collect()
+      assert(out.length === 4)
+    } finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
+  test("geometricNoise's one-array lookup equals the scalar table walk " +
+      "at every threshold and at each threshold +-1") {
+    val s = spark
+    import s.implicits._
+    val mask = (BigInt(1) << 64) - 1
+    Seq(Privacy.geometricThresholds(20),
+        Privacy.geometricThresholds(60, 3, 4)).foreach { ts =>
+      val cap = ts.size / 2
+      val us = (ts.flatMap(t => Seq(t - 1, t, t + 1)) ++
+        Seq(BigInt(0), mask)).map(_ & mask).distinct
+      val got = us.map(_.longValue).toDF("u")
+        .select(col("u"), Privacy.geometricNoise(col("u"), ts))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      us.foreach { uu =>
+        val expected = ts.indexWhere(uu < _) match {
+          case -1 => cap.toLong
+          case j  => (j - cap).toLong
+        }
+        assert(got(uu.longValue) === expected, s"cap $cap, u = $uu")
+      }
+    }
+  }
+
   test("noisyCounts noise equals an independent BigInt inverse-CDF walk " +
       "over the same hash family (JVM functions, not the codegen path)") {
     val s = spark

@@ -111,8 +111,10 @@ class AnnStreamSpec extends SparkSpec {
     val seen = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)] // (batchId, vec_id, index_id)
     val mem = MemoryStream[AnnVec]
-    val q = AnnStream.indexMatchesRefreshing(mem.toDF(), dir, "vec_id",
-        "embedding", threshold = 0.999) { (matches, batchId) =>
+    // indexMatches on each micro-batch replans from scratch: fresh
+    // sidecar, fresh file listing
+    val q = Streams.perBatch(mem.toDF())(AnnStream.indexMatches(_, dir,
+        "vec_id", "embedding", threshold = 0.999)) { (matches, batchId) =>
       seen.synchronized {
         seen ++= matches.collect().map(r =>
           (batchId, r.getAs[Long]("vec_id"), r.getAs[Long]("index_id")))
@@ -244,8 +246,9 @@ class AnnStreamSpec extends SparkSpec {
     // refreshing probe: per-batch full mining == the batch operator
     var got = Set.empty[(Long, Long, Double, Double)]
     val mem2 = MemoryStream[AnnVec]
-    val q2 = AnnStream.bitextProbeRefreshing(mem2.toDF(), dir,
-        "vec_id", "embedding", k = 4, nAssign = 2) { (df, _) =>
+    val q2 = Streams.perBatch(mem2.toDF())(b => Similarity
+        .bitextProbeIndexed(b.sparkSession, dir, b, "vec_id",
+          "embedding", k = 4, nAssign = 2)) { (df, _) =>
       got = got ++ df.collect().map(r => (r.getAs[Long]("x"),
         r.getAs[Long]("best_match"), r.getAs[Double]("cos"),
         r.getAs[Double]("margin")))

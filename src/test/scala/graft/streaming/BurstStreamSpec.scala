@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.ingest.SparkSpec
 import graft.operators.Robust
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streamed burst fold ≡ the batch operator while periods stay
   * inside the retention horizon; the same period split across
@@ -23,16 +22,11 @@ class BurstStreamSpec extends SparkSpec {
       Seq.fill(40)(("a", 31L))).zipWithIndex
       .map { case ((k, p), i) => (k, p, i.toLong) }
     val mem = MemoryStream[(String, Long, Long)]
-    var state = Map.empty[(String, Long), Long]
-    val q = BurstStream.countBatches(
-      mem.toDS().toDF("k", "p", "i"), "k", "p") { (parts, _) =>
-      state = BurstStream.merge(state, parts, keepPeriods = 40)
-    }.outputMode(OutputMode.Update()).start()
-    rows.grouped(45).foreach { chunk =>
-      mem.addData(chunk: _*)
-      q.processAllAvailable()
+    val state = foldAll(mem, mem.toDS().toDF("k", "p", "i"),
+        rows.grouped(45).toSeq, Map.empty[(String, Long), Long]) {
+      (st, batch, _) => BurstStream.merge(st,
+        BurstStream.counts(batch, "k", "p"), keepPeriods = 40)
     }
-    q.stop()
     val streamed = BurstStream.score(state, window = 24,
       minBaseline = 8, threshold = 4.0)
     val batch = Robust.poissonBursts(

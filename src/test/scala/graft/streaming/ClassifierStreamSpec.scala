@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** The NB classifier on a stream: stateless token-llr rows run as a
-  * stream-static join (append mode, no watermark), and the foreachBatch
-  * per-doc path reproduces the batch operator across micro-batches.
+  * stream-static join (append mode, no watermark), and
+  * `QualityClassifier.score` per micro-batch through `Streams.perBatch`
+  * reproduces the batch operator across micro-batches.
   */
 // top-level: encoder codegen cannot reach a class nested in the suite
 case class ClsDoc(doc_id: Long, text: String, ts: Timestamp)
@@ -73,8 +74,8 @@ class ClassifierStreamSpec extends SparkSpec {
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double, Boolean)]
     val mem = MemoryStream[ClsDoc]
-    val writer = ClassifierStream.scores(
-        mem.toDF(), "doc_id", "text", model) { (scored, _) =>
+    val writer = Streams.perBatch(mem.toDF())(
+        QualityClassifier.score(_, "doc_id", "text", model)) { (scored, _) =>
       got ++= scored
         .select(col("doc_id"), col("n_tokens"), col("score"),
           col("predicted"))

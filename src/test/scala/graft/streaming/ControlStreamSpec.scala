@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.ingest.SparkSpec
 import graft.operators.Robust
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -11,7 +12,9 @@ case class CcPoint(k: String, t: Int, y: Double)
   * slices into micro-batches, the chart state equals ONE phase-II
   * resume over the concatenation — and the calibration (μ̂/σ̂/limit)
   * stays the phase-I batch's, so a drift arriving later cannot
-  * recalibrate itself invisible.
+  * recalibrate itself invisible. The stream is a `Streams.fold` whose
+  * first batch calibrates (`ewmaControl`) and whose later batches
+  * resume (`ewmaControlFrom`).
   */
 class ControlStreamSpec extends SparkSpec {
 
@@ -33,13 +36,11 @@ class ControlStreamSpec extends SparkSpec {
     val b2 = (70 until 100).map(t => CcPoint("a", t, 20.0 + (t % 2)))
 
     val mem = MemoryStream[CcPoint]
-    var last: Option[DataFrame] = None
-    val q = ControlStream.ewmaBatches(mem.toDF(), "k", "t", "y",
-      lambda = 0.2, l = 3.0) { (st, _) => last = Some(st) }.start()
-    Seq(cal, b1, b2).foreach { b =>
-      mem.addData(b: _*); q.processAllAvailable()
+    val last = foldAll(mem, mem.toDF(), Seq(cal, b1, b2),
+        Option.empty[DataFrame]) { (st, batch, _) =>
+      Some(st.fold(Robust.ewmaControl(batch, "k", "t", "y", 0.2, 3.0))(
+        Robust.ewmaControlFrom(batch, "k", "t", "y", _, 0.2, 3.0)))
     }
-    q.stop()
 
     val phase1 = Robust.ewmaControl(cal.toDF("k", "t", "y"),
       "k", "t", "y", 0.2, 3.0)

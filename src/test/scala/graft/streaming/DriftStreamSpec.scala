@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.ingest.SparkSpec
 import graft.operators.Divergence
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, size, split}
@@ -38,9 +39,9 @@ class DriftStreamSpec extends SparkSpec {
       DrDoc(200L + i, "zork quux blarg frobnitz gnarl vex", ts0))
 
     var scores = Vector.empty[(Long, Row)]
-    var folded: Option[DataFrame] = None
     val mem = MemoryStream[DrDoc]
-    val q = DriftStream.driftBatches(mem.toDF(), "text", reference) {
+    val q = Streams.perBatch(mem.toDF())(b => Divergence.divergence(
+        DriftStream.tokenCounts(b, "text"), reference, "token", "c")) {
       (score, batchId) =>
         scores :+= (batchId -> score.head())
     }.start()
@@ -64,15 +65,24 @@ class DriftStreamSpec extends SparkSpec {
     assert(scores.toMap.apply(0L).getAs[Double]("js") ===
       batchScore.getAs[Double]("js"))
 
-    // cumulative fold: merging the two batch count tables equals
-    // counting the concatenated stream
+    // cumulative fold: merging the two batch count tables, and the
+    // same merge folded over the stream, equal counting the
+    // concatenated stream
     val c1 = DriftStream.tokenCounts(b1.toDF(), "text")
     val c2 = DriftStream.tokenCounts(b2.toDF(), "text")
-    folded = Some(DriftStream.mergeCounts(c1, c2))
+    val folded = DriftStream.mergeCounts(c1, c2)
     val whole = DriftStream.tokenCounts((b1 ++ b2).toDF(), "text")
     def m(df: DataFrame) = df.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(m(folded.get) === m(whole))
+    assert(m(folded) === m(whole))
+    val mem2 = MemoryStream[DrDoc]
+    val streamed = foldAll(mem2, mem2.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val c = DriftStream.tokenCounts(batch, "text")
+      Some(acc.fold(c)(DriftStream.mergeCounts(_, c)))
+    }
+    assert(m(streamed.get) === m(whole))
+    streamed.get.unpersist()
   }
 
   test("w1Batches: per-batch W1 == batch-mode wasserstein1; a pure " +
@@ -96,9 +106,10 @@ class DriftStreamSpec extends SparkSpec {
 
     var scores = Vector.empty[(Long, Row)]
     val mem = MemoryStream[DrDoc]
-    val q = DriftStream.w1Batches(
-      mem.toDF().withColumn("n",
-        size(split(col("text"), " ")).cast("long")), "n", refHist) {
+    val q = Streams.perBatch(mem.toDF().withColumn("n",
+        size(split(col("text"), " ")).cast("long")))(b =>
+        Divergence.wasserstein1(DriftStream.valueCounts(b, "n"), refHist,
+          "v", "c")) {
       (score, batchId) => scores :+= (batchId -> score.head())
     }.start()
     mem.addData(b0: _*)

@@ -2,14 +2,15 @@ package graft.streaming
 
 import graft.ingest.SparkSpec
 import graft.operators.Forecast
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 case class FcPoint(k: String, t: Int, y: Double)
 
-/** The resume law, streamed: folding batches through holtBatches ends in
-  * EXACTLY the whole-history batch state — including a key that debuts
-  * mid-stream.
+/** The resume law, streamed: a `Streams.fold` whose first batch runs
+  * the classic init and whose later batches resume ends in EXACTLY the
+  * whole-history batch state — including a key that debuts mid-stream.
   */
 class ForecastStreamSpec extends SparkSpec {
 
@@ -26,13 +27,13 @@ class ForecastStreamSpec extends SparkSpec {
       all.filter(_.t >= 60))
 
     val mem = MemoryStream[FcPoint]
-    var last: Option[DataFrame] = None
-    val q = ForecastStream.holtBatches(mem.toDF(), "k", "t", "y",
-      alpha = 0.3, beta = 0.1, horizon = 5) { (st, _) =>
-        last = Some(st)
-    }.start()
-    batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    q.stop()
+    val last = foldAll(mem, mem.toDF(), batches, Option.empty[DataFrame]) {
+      (st, batch, _) =>
+        Some(st.fold(Forecast.holtLinear(batch, "k", "t", "y",
+          alpha = 0.3, beta = 0.1, horizon = 5))(
+          Forecast.holtLinearFrom(batch, "k", "t", "y", _,
+            alpha = 0.3, beta = 0.1, horizon = 5)))
+    }
 
     def m(df: DataFrame) = df.collect().map(r => r.getString(0) ->
       (r.getAs[Long]("n_obs"), r.getAs[Double]("level"),
@@ -65,13 +66,13 @@ class ForecastStreamSpec extends SparkSpec {
       all.filter(p => p.t >= 40 && p.t < 80), all.filter(_.t >= 80))
 
     val mem = MemoryStream[FcPoint]
-    var last: Option[DataFrame] = None
-    val q = ForecastStream.holtWintersBatches(mem.toDF(), "k", "t",
-      "y", period = 7, alpha = 0.3, beta = 0.05, gamma = 0.2) {
-        (st, _) => last = Some(st)
-      }.start()
-    batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    q.stop()
+    val last = foldAll(mem, mem.toDF(), batches, Option.empty[DataFrame]) {
+      (st, batch, _) =>
+        Some(st.fold(Forecast.holtWintersState(batch, "k", "t", "y",
+          period = 7, alpha = 0.3, beta = 0.05, gamma = 0.2))(
+          Forecast.holtWintersFrom(batch, "k", "t", "y", _, period = 7,
+            alpha = 0.3, beta = 0.05, gamma = 0.2)))
+    }
 
     def m(df: DataFrame) = df.collect().map(r => r.getString(0) ->
       (r.getAs[Long]("n_obs"), r.getAs[Long]("t_last"),

@@ -8,9 +8,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** The LM scorer on a stream: the stateless per-gram stage runs as
-  * plain stream-static joins (append mode, no watermark), and the
-  * foreachBatch per-doc path reproduces the batch operator exactly —
+/** The LM scorer on a stream: the stateless per-gram stages
+  * (`NgramLm.scoredGrams`, `knScoredGrams`) run as plain stream-static
+  * joins (append mode, no watermark), and `logProbScore` per micro-batch
+  * through `Streams.perBatch` reproduces the batch operator exactly —
   * including across multiple micro-batches.
   */
 // top-level: encoder codegen cannot reach a class nested in the suite
@@ -39,7 +40,7 @@ class LmStreamSpec extends SparkSpec {
       LmDoc(11L, "a volcano erupted yesterday", ts0),
       LmDoc(12L, "solo", ts0)) // below order: no grams, no rows
     val mem = MemoryStream[LmDoc]
-    val q = LmStream.scoredGrams(mem.toDF(), "doc_id", "text", lm)
+    val q = NgramLm.scoredGrams(mem.toDF(), "doc_id", "text", lm)
       .writeStream.format("memory").queryName("lm_grams")
       .outputMode(OutputMode.Append()).start()
     mem.addData(docs: _*)
@@ -69,7 +70,7 @@ class LmStreamSpec extends SparkSpec {
       LmDoc(11L, "a volcano erupted yesterday", ts0),
       LmDoc(12L, "solo", ts0))
     val mem = MemoryStream[LmDoc]
-    val q = LmStream.knScoredGrams(mem.toDF(), "doc_id", "text", lm)
+    val q = NgramLm.knScoredGrams(mem.toDF(), "doc_id", "text", lm)
       .writeStream.format("memory").queryName("kn_grams")
       .outputMode(OutputMode.Append()).start()
     mem.addData(docs: _*)
@@ -98,10 +99,10 @@ class LmStreamSpec extends SparkSpec {
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double)]
     val mem = MemoryStream[LmDoc]
-    val writer = LmStream.logProbScores(mem.toDF(), "doc_id", "text", lm) {
-      (scores, _) =>
-        got ++= scores.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val writer = Streams.perBatch(mem.toDF())(
+        NgramLm.logProbScore(_, "doc_id", "text", lm)) { (scores, _) =>
+      got ++= scores.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }
     val q = writer.start()
     mem.addData(b1: _*)

@@ -4,15 +4,16 @@ import java.sql.Timestamp
 
 import graft.ingest.SparkSpec
 import graft.operators.Packing
-import org.apache.spark.sql.DataFrame
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 // top-level: encoder codegen cannot reach a class nested in the suite
 case class PkDoc(doc_id: Long, text: String, ts: Timestamp)
 
-/** Streaming packing: batches packed at the carried offset union to
-  * exactly the whole-stream packing — including sequences that straddle
-  * a batch boundary.
+/** Streaming packing: batches of an id-ordered stream packed at the
+  * offset a `Streams.fold` carries (one long: the tokens seen before the
+  * batch) union to exactly the whole-stream packing — including
+  * sequences that straddle a batch boundary.
   */
 class PackStreamSpec extends SparkSpec {
 
@@ -30,16 +31,14 @@ class PackStreamSpec extends SparkSpec {
 
     var folded = Vector.empty[(Long, Long, Long, Long, Long)]
     val mem = MemoryStream[PkDoc]
-    val q = PackStream.packBatches(mem.toDF(), "doc_id", "text",
-        seqLen = 5) { (packed, _) =>
-      folded ++= packed.collect().map(r => (r.getLong(0), r.getLong(1),
+    foldAll(mem, mem.toDF(), Seq(b1, b2), 0L) { (offset, batch, _) =>
+      val packed = Packing.packSequences(batch, "doc_id", "text",
+        seqLen = 5, startOffset = offset).collect()
+      folded ++= packed.map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getLong(3), r.getLong(4)))
-    }.start()
-    mem.addData(b1: _*)
-    q.processAllAvailable()
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
+      offset + packed.map(r => r.getAs[Long]("doc_to") -
+        r.getAs[Long]("doc_from")).sum
+    }
 
     val whole = Packing.packSequences((b1 ++ b2).toDF(), "doc_id",
         "text", seqLen = 5)

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.ingest.SparkSpec
 import graft.operators.Sampling
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -26,21 +27,13 @@ class SampleStreamSpec extends SparkSpec {
     val b1 = (0L until 120L).map(i => WItem(i, 1.0 + (i % 7), ts0))
     val b2 = (120L until 200L).map(i => WItem(i, 1.0 + (i % 5), ts0))
 
-    var reservoir: Option[DataFrame] = None
     val mem = MemoryStream[WItem]
-    val q = SampleStream.weightedCandidates(
-        mem.toDF(), "id", "w", k = 15) { (cand, _) =>
-      val snap = cand.cache()
-      snap.count()
-      reservoir = Some(reservoir.fold(snap)(acc =>
-        SampleStream.merge(acc, snap, "id", 15).cache()))
-      reservoir.get.count()
-    }.start()
-    mem.addData(b1: _*)
-    q.processAllAvailable()
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
+    val reservoir = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val cand = Sampling.weightedSampleWithoutReplacement(
+        batch, "id", "w", k = 15)
+      Some(acc.fold(cand)(SampleStream.merge(_, cand, "id", 15)))
+    }
 
     val streamed = reservoir.get.select("id").collect()
       .map(_.getLong(0)).toSet

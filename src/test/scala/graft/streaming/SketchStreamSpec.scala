@@ -4,13 +4,14 @@ import java.sql.Timestamp
 
 import graft.ingest.SparkSpec
 import graft.operators.Sketches
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Sketches over a stream: per-batch sketches folded with the pure
-  * merge operators are identical to the batch sketch of the whole
-  * stream — the property that makes a few-KB running state valid
-  * regardless of stream length.
+/** Sketches over a stream: per-batch sketches folded through
+  * `Streams.fold` with the pure merge operators are identical to the
+  * batch sketch of the whole stream — the property that makes a few-KB
+  * running state valid regardless of stream length.
   */
 // top-level: encoder codegen cannot reach a class nested in the suite
 case class SkItem(item: String, ts: Timestamp)
@@ -32,21 +33,13 @@ class SketchStreamSpec extends SparkSpec {
     val b1 = (1 to 50).map(i => SkItem(s"w${i % 17}", ts0))
     val b2 = (1 to 30).map(i => SkItem(s"w${i % 23}", ts0))
 
-    var cms: Option[DataFrame] = None
     val mem = MemoryStream[SkItem]
-    val q = SketchStream.countMinBatches(
-        mem.toDF(), "item", depth = 4, width = 256) { (cells, _) =>
-      val snap = cells.cache()
-      snap.count()
-      cms = Some(cms.fold(snap)(acc =>
-        Sketches.countMinMerge(acc, snap).cache()))
-      cms.get.count()
-    }.start()
-    mem.addData(b1: _*)
-    q.processAllAvailable()
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
+    val cms = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val cells = Sketches.countMinBuild(batch, "item", depth = 4,
+        width = 256)
+      Some(acc.fold(cells)(Sketches.countMinMerge(_, cells)))
+    }
 
     def cells(df: DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -55,21 +48,12 @@ class SketchStreamSpec extends SparkSpec {
     assert(cells(cms.get) === cells(whole),
       "folded stream sketch must equal the batch sketch")
 
-    var regs: Option[DataFrame] = None
     val mem2 = MemoryStream[SkItem]
-    val q2 = SketchStream.hllBatches(mem2.toDF(), "item", p = 6) {
-      (r, _) =>
-        val snap = r.cache()
-        snap.count()
-        regs = Some(regs.fold(snap)(acc =>
-          Sketches.hllMerge(acc, snap).cache()))
-        regs.get.count()
-    }.start()
-    mem2.addData(b1: _*)
-    q2.processAllAvailable()
-    mem2.addData(b2: _*)
-    q2.processAllAvailable()
-    q2.stop()
+    val regs = foldAll(mem2, mem2.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val r = Sketches.hllRegisters(batch, "item", p = 6)
+      Some(acc.fold(r)(Sketches.hllMerge(_, r)))
+    }
 
     def rmap(df: DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -85,20 +69,12 @@ class SketchStreamSpec extends SparkSpec {
     val b1 = (1L to 40L).map(i => SkVal(i % 19, ts0))
     val b2 = (1L to 25L).map(i => SkVal(i * 37, ts0))
 
-    var hist: Option[DataFrame] = None
     val mem = MemoryStream[SkVal]
-    val q = SketchStream.logHistBatches(mem.toDF(), "v") { (h, _) =>
-      val snap = h.cache()
-      snap.count()
-      hist = Some(hist.fold(snap)(acc =>
-        Sketches.logHistMerge(acc, snap).cache()))
-      hist.get.count()
-    }.start()
-    mem.addData(b1: _*)
-    q.processAllAvailable()
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
+    val hist = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val h = Sketches.logHistBuild(batch, "v")
+      Some(acc.fold(h)(Sketches.logHistMerge(_, h)))
+    }
 
     def hmap(df: DataFrame) = df.collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -114,17 +90,11 @@ class SketchStreamSpec extends SparkSpec {
     val b1 = (1 to 300).map(i => SkKeyed(s"k${i % 2}", s"it_$i"))
     val b2 = (200 to 500).map(i => SkKeyed(s"k${i % 2}", s"it_$i"))
     val mem = MemoryStream[SkKeyed]
-    var sk: Option[DataFrame] = None
-    val q = SketchStream.kmvBatches(mem.toDF(), "key", "item", 32) {
-      (b, _) =>
-        val snap = b.cache(); snap.count()
-        sk = Some(sk.fold(snap)(acc =>
-          Sketches.kmvMerge(acc, snap, 32).cache()))
-        sk.get.count()
-    }.start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    q.stop()
+    val sk = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val b = Sketches.kmvSketchBy(batch, "key", "item", 32)
+      Some(acc.fold(b)(Sketches.kmvMerge(_, b, 32)))
+    }
     def m(df: DataFrame) = df.select("key", "rank", "h").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     val whole = Sketches.kmvSketchBy((b1 ++ b2).toDF("key", "item"),
@@ -143,18 +113,13 @@ class SketchStreamSpec extends SparkSpec {
     val b2 = (401 to 900).map(i =>
       SkQuant(s"k${i % 2}", s"d$i", (i.toLong * i) % 997))
     val mem = MemoryStream[SkQuant]
-    var sk: Option[DataFrame] = None
-    val q = SketchStream.quantileSampleBatches(mem.toDF(), "key", "id",
-      "v", 64) { (b, _) =>
-        val snap = b.cache(); snap.count()
-        sk = Some(sk.fold(snap)(acc =>
-          graft.operators.QuantileSketch.sampleMerge(acc, snap, 64)
-            .cache()))
-        sk.get.count()
-    }.start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    q.stop()
+    val sk = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val b = graft.operators.QuantileSketch.sampleRegistersBy(
+        batch, "key", "id", "v", 64)
+      Some(acc.fold(b)(
+        graft.operators.QuantileSketch.sampleMerge(_, b, 64)))
+    }
     def m(df: DataFrame) = df.select("key", "h", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val whole = graft.operators.QuantileSketch.sampleRegistersBy(
@@ -177,18 +142,13 @@ class SketchStreamSpec extends SparkSpec {
     val b2 = (301 to 700).map(i =>
       SkWQuant(s"k${i % 2}", i.toLong, (i * 3L) % 509, 1L + i % 7))
     val mem = MemoryStream[SkWQuant]
-    var sk: Option[DataFrame] = None
-    val q = SketchStream.weightedQuantileSampleBatches(mem.toDF(),
-      "key", "id", "v", "w", 48) { (b, _) =>
-        val snap = b.cache(); snap.count()
-        sk = Some(sk.fold(snap)(acc =>
-          graft.operators.QuantileSketch.weightedSampleMerge(acc, snap,
-            48).cache()))
-        sk.get.count()
-    }.start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    q.stop()
+    val sk = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (acc, batch, _) =>
+      val b = graft.operators.QuantileSketch.weightedSampleRegistersBy(
+        batch, "key", "id", "v", "w", 48)
+      Some(acc.fold(b)(
+        graft.operators.QuantileSketch.weightedSampleMerge(_, b, 48)))
+    }
     def m(df: DataFrame) = df.select("key", "skey", "v").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
     val whole = graft.operators.QuantileSketch.weightedSampleRegistersBy(
@@ -207,17 +167,15 @@ class SketchStreamSpec extends SparkSpec {
       (151 to 300).map(i => s"cold$i")
     val mem = MemoryStream[String]
     val k = 9
-    var acc: Map[String, Long] = Map.empty
-    var n = 0L
-    val q = SketchStream.misraGriesBatches(
-      mem.toDF().select(org.apache.spark.sql.functions.col("value")
-        .as("item")), "item", k) { (sn, _) =>
-        acc = graft.operators.HeavyHitters.mergeSummaries(acc, sn._1, k)
-        n += sn._2
-    }.start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    q.stop()
+    val (acc, n) = foldAll(mem, mem.toDF().select(
+        org.apache.spark.sql.functions.col("value").as("item")),
+        Seq(b1, b2), (Map.empty[String, Long], 0L)) {
+      case ((acc, n), batch, _) =>
+        val (summary, bn) =
+          graft.operators.HeavyHitters.summarize(batch, "item", k)
+        (graft.operators.HeavyHitters.mergeSummaries(acc, summary, k),
+          n + bn)
+    }
     val all = b1 ++ b2
     assert(n === all.size.toLong)
     assert(acc.size <= k)
@@ -239,17 +197,13 @@ class SketchStreamSpec extends SparkSpec {
     val b1 = (1 to 300).map(i => SkShard(i % 8, i.toLong, i * 3L))
     val b2 = (250 to 600).map(i => SkShard(i % 8, i.toLong, i * 3L))
     val mem = MemoryStream[SkShard]
-    var acc: Option[DataFrame] = None
-    val q = SketchStream.manifestBatches(mem.toDF(), "shard",
-      Seq("k", "v")) { (m, _) =>
-        val snap = m.cache(); snap.count()
-        acc = Some(acc.fold(snap)(prev => graft.sources.SkippingManifest
-          .merge(prev, snap, "shard", Seq("k", "v")).cache()))
-        acc.get.count()
-    }.start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    q.stop()
+    val acc = foldAll(mem, mem.toDF(), Seq(b1, b2),
+        Option.empty[DataFrame]) { (prev, batch, _) =>
+      val m = graft.sources.SkippingManifest.build(batch, "shard",
+        Seq("k", "v"))
+      Some(prev.fold(m)(graft.sources.SkippingManifest
+        .merge(_, m, "shard", Seq("k", "v"))))
+    }
     def m(df: DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSet

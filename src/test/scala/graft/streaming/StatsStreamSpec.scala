@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.ingest.SparkSpec
 import graft.operators.Analyze
+import graft.streaming.StreamsSpec.foldAll
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streamed catalog stats ≡ the batch ANALYZE on the mergeable
   * columns, plus the fold's algebraic laws.
@@ -34,19 +33,14 @@ class StatsStreamSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     val rows = tape
     val mem = MemoryStream[(Long, Option[Double], Option[String])]
-    var state = Map.empty[String, ColStats]
-    val q = StatsStream.statsBatches(
-      mem.toDS().toDF("k", "v", "t")) { (parts, _) =>
-      parts.foreach { p =>
-        state += p.col_name -> state.get(p.col_name)
-          .map(StatsStream.merge(_, p)).getOrElse(p)
-      }
-    }.outputMode(OutputMode.Update()).start()
-    rows.grouped(100).foreach { chunk =>
-      mem.addData(chunk: _*)
-      q.processAllAvailable()
+    val state = foldAll(mem, mem.toDS().toDF("k", "v", "t"),
+        rows.grouped(100).toSeq, Map.empty[String, ColStats]) {
+      (st, batch, _) =>
+        StatsStream.partials(batch).collect().foldLeft(st) { (acc, p) =>
+          acc + (p.col_name -> acc.get(p.col_name)
+            .map(StatsStream.merge(_, p)).getOrElse(p))
+        }
     }
-    q.stop()
     val batch = Analyze.tableStats(rows.toDF("k", "v", "t"))
       .collect().map(r => r.getString(0) -> r).toMap
     Seq("k", "v", "t").foreach { c =>
