@@ -119,8 +119,10 @@ object Divergence {
 
   /** Two-sample exact Wasserstein-1 from (value, count) HISTOGRAMS —
     * the reference-vs-candidate form ([[divergence]]'s sibling;
-    * a stream scores each micro-batch's [[graft.streaming.DriftStream
-    * .valueCounts]] with it through [[graft.streaming.Streams.perBatch]]). Returns one row `(n_p, n_q, w1)` on the same
+    * a stream scores each micro-batch's
+    * [[graft.streaming.DriftStream.valueCounts]] with it through
+    * [[graft.streaming.Streams.perBatch]]). Returns one row
+    * `(n_p, n_q, w1)` on the same
     * integer-grid / exact-DECIMAL contract as [[wasserstein1By]] —
     * under the hood the two histograms tag as the two groups of the
     * shared group-vs-rest core, so batch and monitoring paths can

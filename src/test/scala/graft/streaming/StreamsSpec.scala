@@ -55,7 +55,10 @@ class StreamsSpec extends SparkSpec {
     intercept[StreamingQueryException](q1.processAllAvailable())
     val q2 = writer.start() // Spark replays the uncommitted batch 1
     q2.processAllAvailable()
-    batches.drop(2).foreach { b => mem.addData(b: _*); q2.processAllAvailable() }
+    batches.drop(2).foreach { b =>
+      mem.addData(b: _*)
+      q2.processAllAvailable()
+    }
     q2.stop()
     assert(failed)
     last
