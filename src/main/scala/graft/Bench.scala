@@ -66,7 +66,9 @@ object Bench {
     // decontaminate + dedup + sample), q61/q62 the vocab-heap and
     // frame-explode paths. Round-3 lesson: un-warmed families compare JVM
     // state, not plans (q60 measured 4.0 s in-bench vs 0.73 s warm).
-    Seq("q03_join_agg", "q07_explode_wordcount", "q32_sessionize",
+    // Names resolve through Harness.queryNames: a stale one fails here,
+    // naming itself, instead of silently skipping its family's warm-up.
+    Harness.queryNames(Seq("q03_join_agg", "q07_explode_wordcount", "q32_sessionize",
       "q48_token_packing", "q18_minhash_candidates", "q51_dedup_corpus",
       "q64_corpus_pipeline", "q61_vocab_topk", "q62_frame_sampling",
       // round-4 families: quantization HOF path, bloom UDF+treeAggregate,
@@ -86,12 +88,10 @@ object Bench {
       // the span-index family's first touch costs ~5 s of codegen/JIT
       // (QTime: rep1 8.9 s, rep2+ 0.6 s with the identical plan) — warm
       // it so the measured number is the plan, not the first touch
-      "q82_span_dedup")
+      "q82_span_dedup").mkString(","))
       .foreach { n =>
-        SparkEntry.queries.get(n).foreach { fn =>
-          try CacheScope.scoped { fn(spark, sfDir).count() }
-          catch { case _: Throwable => () }
-        }
+        try CacheScope.scoped { SparkEntry.queries(n)(spark, sfDir).count() }
+        catch { case _: Throwable => () }
       }
 
     // Each query runs in its own CacheScope: operator-persisted caches

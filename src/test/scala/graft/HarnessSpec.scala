@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import graft.ingest.SparkSpec
 
-/** [[Harness.session]]'s confs, [[Probe.parseArgs]]'s validation, and
+/** [[Harness.session]]'s confs, the pinned [[Verify.oracleJson]]
+  * rendering, [[Probe.parseArgs]]'s validation, and
   * [[Probe.run]] at sf0.001: each rep counts the query's rows, the
   * listener's job/stage/task counts repeat across reps, the plan file
   * holds the physical plan, and each stage line names the action's call
@@ -22,6 +23,16 @@ class HarnessSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(s.sparkContext.getConf.get("spark.ui.enabled") === "false")
+  }
+
+  test("the full oracle_sql.json rendering is pinned: 416 entries, fixed bytes") {
+    val json = Verify.oracleJson(SparkEntry.queries.keys)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.size === 416)
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // any edit to any oracle's text, or to the rendering, moves this
+    assert(sha === "bcfb1b0d37339a56b8bc0c8587cf82057dace3aa5e2909622bb241270a2dd680")
   }
 
   test("Probe arguments: defaults fill in, bad ones fail naming the problem") {

@@ -18,6 +18,29 @@ class NpyDataFramesSpec extends graft.ingest.SparkSpec {
   }
 }
 
+/** [[NpyDataFramesSpec]]'s hermetic twin: the artifacts are written here
+  * with [[Npy.write]], so the read path runs without the reference tree.
+  */
+class NpyDataFramesHermeticSpec extends graft.ingest.SparkSpec {
+  test("binaryFile + npy decode loads 1-D and 2-D artifacts, skipping non-npy files") {
+    val dir = Files.createTempDirectory("graft-npy")
+    try {
+      val vec = Array(1.5f, -2f, 0.25f)
+      val mat = Array.tabulate(6)(i => i * 0.5f)
+      Files.write(dir.resolve("doc.a.npy"), Npy.write(vec, Seq(3)))
+      Files.write(dir.resolve("doc.b.npy"), Npy.write(mat, Seq(2, 3)))
+      Files.write(dir.resolve("notes.txt"), "not an npy".getBytes("UTF-8"))
+      val rows = NpyDataFrames.readEmbeddings(spark, dir.toString).collect()
+        .map(r => (r.getAs[String]("doc_id"), r.getAs[Seq[Int]]("shape"),
+          r.getAs[Seq[Float]]("embedding")))
+        .sortBy(_._1).toSeq
+      assert(rows === Seq(
+        ("doc.a", Seq(3), vec.toSeq),
+        ("doc.b", Seq(2, 3), mat.toSeq)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+}
+
 class NpySpec extends AnyFunSuite {
 
   test("reads the reference's real indexer npy fixture") {

@@ -4,7 +4,8 @@
 Reads each /tmp/verify_out/<q> parquet (Spark result), runs the matching
 oracle SQL from oracle_sql.json in DuckDB against the same sf dir, sorts
 columns by name and rows by value, and compares cell-by-cell with a small
-float tolerance. Queries without an oracle get a rows-only report.
+float tolerance. Every key of oracle_sql.json must have a result parquet: a
+query that threw wrote none, and fails here as MISSING.
 
 Type-strict: in addition to values, the DuckDB-visible column TYPES of the
 oracle result must exactly match the types of the Spark parquet (after
@@ -54,21 +55,17 @@ fails = []
 # profile that keeps the DuckDB half inside the driver's gate budget.
 close_path = sys.argv[3] if len(sys.argv) > 3 else "VERIFY_CLOSE.json"
 record = {}
-import os, time
-for q in sorted(os.listdir(out_dir)):
-    if not os.path.isdir(f"{out_dir}/{q}"):
+import glob, os, time
+for q in sorted(oracles):
+    if not glob.glob(f"{out_dir}/{q}/*.parquet"):
+        print(f"{q:28s} MISSING: no result parquet")
+        record[q] = {"status": "MISSING", "rows": 0, "oracle_sec": 0.0}
+        fails.append(q)
         continue
     r = con.execute(f"SELECT * FROM '{out_dir}/{q}/*.parquet'")
     scols = [d[0] for d in r.description]
     srows = r.fetchall()
     record[q] = {"status": "?", "rows": len(srows), "oracle_sec": 0.0}
-    if q not in oracles:
-        print(f"{q:28s} rows-only: {len(srows)} rows "
-              f"{'OK' if len(srows) > 0 else 'EMPTY!'}")
-        record[q]["status"] = "rows-only" if len(srows) else "EMPTY"
-        if len(srows) == 0:
-            fails.append(q)
-        continue
     t0 = time.time()
     try:
         o = con.execute(oracles[q])
