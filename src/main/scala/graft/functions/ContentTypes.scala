@@ -73,13 +73,4 @@ object ContentTypes {
     val ext = regexp_extract(url, "(\\.[^./]*)$", 1)
     element_at(m, when(ext =!= "", ext).otherwise(" "))
   }
-
-  /** Column form of stage 3. */
-  def fromHeaderCol(header: Column): Column =
-    trim(split(coalesce(header, lit("")), ";").getItem(0))
-
-  /** Column form of the full fallback chain. */
-  def determineCol(content: Column, url: Column, header: Column): Column =
-    coalesce(sniffMagicCol(content), fromExtensionCol(url),
-      fromHeaderCol(header))
 }

@@ -57,13 +57,6 @@ object TextFunctions {
   def distinctTokenCount(text: Column): Column =
     size(array_distinct(tokens(text)))
 
-  /** BPE-ish sub-word count: words plus digit runs and punctuation marks
-    * counted as separate tokens.
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(lower(text), "([^a-z0-9]+)|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])"),
-      t => length(t) > 0))
-
   /** How many tokens fall inside `words` (a literal set). */
   def stopwordHits(toks: Column, words: Seq[String]): Column =
     size(filter(toks, t => t.isInCollection(words)))

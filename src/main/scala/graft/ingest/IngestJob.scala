@@ -2,7 +2,12 @@ package graft.ingest
 
 import java.time.Instant
 
+import scala.reflect.ClassTag
+
 import graft.model.Schemas.{IngestResult, UpdateConfig}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
@@ -13,10 +18,10 @@ import org.apache.spark.util.SerializableConfiguration
   * runs TO COMPLETION before phase 2 (new documents) starts — the barrier
   * is a correctness property (a new doc and an update to the same id must
   * not race, reference `main.py:164-229`). Each phase is one shuffle-free
-  * job of one stage: `parallelize` cuts the rows into contiguous slices,
-  * at most one per task slot, run by one effectful `mapPartitions` under
-  * one `collect`; a phase with no rows runs no job. Per-row failures
-  * become `IngestResult.error` strings and the job always completes
+  * job of one stage: [[slices]] cuts its rows, and one `collect` at the
+  * phase's own call site runs them; a phase with no rows runs no job.
+  * Per-row failures become [[errorText]] strings in `IngestResult.error`
+  * and the job always completes
   * (reference `main.py:184-196,221-227`; exit 0 asserted by
   * `test_integration.py:440,494`). Trade-off: the driver holds the control
   * rows, as the one task that `multiLine` reads a whole file in already did.
@@ -25,6 +30,26 @@ object IngestJob {
 
   /** One run's outcome: the report rows plus where they were written. */
   case class RunReport(results: Seq[IngestResult], reportPath: String)
+
+  /** The slicing policy of both phases: `parallelize` cuts `rows` into
+    * contiguous slices, at most one per task slot, and one effectful
+    * `mapPartitions` runs `f` on each row with the executor's Hadoop
+    * configuration. The caller's `collect` is the phase's one action.
+    */
+  def slices[T: ClassTag](sc: SparkContext, rows: Seq[T],
+      conf: SerializableConfiguration)(
+      f: (T, Configuration) => IngestResult): RDD[IngestResult] =
+    sc.parallelize(rows, math.min(rows.size, sc.defaultParallelism))
+      .mapPartitions { it =>
+        val c = conf.value
+        it.map(f(_, c))
+      }
+
+  /** A per-row failure as report text, `"Type: message"`
+    * (reference `main.py:221-227`).
+    */
+  def errorText(e: Exception): String =
+    s"${e.getClass.getSimpleName}: ${e.getMessage}"
 
   /** Execute a full ingest run against `cfg.pipelineRoot`.
     *
@@ -49,29 +74,24 @@ object IngestJob {
     // One row = one document with its grouped actions, so the
     // per-document sequential semantics (U1) survive any slicing.
     val updateReport: Seq[IngestResult] = if (updates.isEmpty) Nil else
-      sc.parallelize(updates, math.min(updates.size, sc.defaultParallelism))
-        .mapPartitions { rows =>
-          val c = conf.value
-          rows.map { case (documentId, docUpdates) =>
-            try {
-              val actionResults =
-                Updates.updateDocument(documentId, docUpdates, cfg, runTs, c)
-              // per-action error lists do NOT fail the document (reference
-              // main.py:184-196 discards them too), but they are logged
-              actionResults.filter(_.error != "[]").foreach { r =>
-                JsonLog.error("updated_document_actions",
-                  s"update action '${r.update_type}' on $documentId " +
-                    s"reported errors: ${r.error}",
-                  "document_id" -> documentId)
-              }
-              IngestResult(documentId, "updated", None)
-            } catch {
-              case e: Exception =>
-                IngestResult(documentId, "updated",
-                  Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-            }
+      slices(sc, updates, conf) { case ((documentId, docUpdates), c) =>
+        try {
+          val actionResults =
+            Updates.updateDocument(documentId, docUpdates, cfg, runTs, c)
+          // per-action error lists do NOT fail the document (reference
+          // main.py:184-196 discards them too), but they are logged
+          actionResults.filter(_.error != "[]").foreach { r =>
+            JsonLog.error("updated_document_actions",
+              s"update action '${r.update_type}' on $documentId " +
+                s"reported errors: ${r.error}",
+              "document_id" -> documentId)
           }
+          IngestResult(documentId, "updated", None)
+        } catch {
+          case e: Exception =>
+            IngestResult(documentId, "updated", Some(errorText(e)))
         }
+      }
         // the barrier: phase-1 results are in before phase 2 starts
         .collect().toSeq
 

@@ -28,8 +28,7 @@ import org.apache.spark.util.SerializableConfiguration
 object NewDocuments {
 
   /** Outcome row for one new document: the source doc, upload facts (null
-    * when skipped), or a per-row error string `"Type: message"`
-    * (reference `main.py:221-227`).
+    * when skipped), or a per-row error string ([[IngestJob.errorText]]).
     */
   case class Processed(
       doc: BackendDocument,
@@ -130,21 +129,19 @@ object NewDocuments {
       }
     } catch {
       case e: Exception =>
+        val error = IngestJob.errorText(e)
         JsonLog.error("new_document_actions",
-          s"Ingest failed for '${doc.import_id}': " +
-            s"${e.getClass.getSimpleName}: ${e.getMessage}",
+          s"Ingest failed for '${doc.import_id}': $error",
           "document_id" -> doc.import_id)
-        Processed(doc, None, None, None,
-          Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+        Processed(doc, None, None, None, Some(error))
     }
   }
 
   /** Phase-2 pipeline over the control file's new documents, shared by
     * the batch job and the streaming foreachBatch: one Spark job of one
-    * stage, no shuffle. `parallelize` cuts `docs` into contiguous slices,
-    * at most one per task slot, so the fetches spread over the slots; one
-    * effectful `mapPartitions` under one `collect` runs them, and no
-    * documents means no job. Each row runs [[processOne]], then
+    * stage, no shuffle. [[IngestJob.slices]] spreads `docs` over the task
+    * slots and one `collect` runs them; no documents means no job. Each
+    * row runs [[processOne]], then
     * (error-free rows only, skips included) writes its K2 parser input,
     * one pretty-printed JSON at `{pipelineRoot}/{parserInputPrefix}/
     * {document_id}.json` in exact field order (reference
@@ -166,24 +163,19 @@ object NewDocuments {
       converter: Converter,
       runTs: Instant,
       conf: SerializableConfiguration): Seq[IngestResult] = {
-    val sc = spark.sparkContext
     val outputLocation = s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}"
-    if (docs.isEmpty) Nil else sc.parallelize(docs, math.min(docs.size, sc.defaultParallelism))
-      .mapPartitions { rows =>
-        val c = conf.value
-        rows.map { doc =>
-          val p = processOne(doc, cfg.documentRoot, fetcher, converter, runTs, c)
-          if (p.error.isEmpty) {
-            val text = ParserInputJson.render(
-              doc, p.cdn_object, p.content_type, p.md5_sum)
-            Fetcher.withRetry(4) {
-              Storage.writeString(
-                s"$outputLocation/${doc.import_id}.json", text, c)
-            }
+    if (docs.isEmpty) Nil else
+      IngestJob.slices(spark.sparkContext, docs, conf) { (doc, c) =>
+        val p = processOne(doc, cfg.documentRoot, fetcher, converter, runTs, c)
+        if (p.error.isEmpty) {
+          val text = ParserInputJson.render(
+            doc, p.cdn_object, p.content_type, p.md5_sum)
+          Fetcher.withRetry(4) {
+            Storage.writeString(
+              s"$outputLocation/${doc.import_id}.json", text, c)
           }
-          IngestResult(doc.import_id, "new", p.error)
         }
-      }
-      .collect().toSeq
+        IngestResult(doc.import_id, "new", p.error)
+      }.collect().toSeq
   }
 }

@@ -41,22 +41,8 @@ object Updates {
   def orderActions(actions: Seq[(Update, String)]): Seq[(Update, String)] =
     actions.find(_._2 == Actions.Parse) match {
       case Some(parseAction) => Seq(parseAction)
-      case None =>
-        actions.sortBy { case (_, name) => Mappings.ActionPriority(name) }
+      case None => actions.sortBy(_._2 == Actions.UpdateDontParse)
     }
-
-  /** U4: candidate cache keys for a document under one prefix. */
-  def documentFiles(prefixPath: String, documentId: String,
-      suffix: String): Seq[String] = Seq(
-    s"$prefixPath/$documentId.$suffix",
-    s"$prefixPath/${documentId}_translated_en.$suffix")
-
-  private def prefixPath(cfg: UpdateConfig, prefix: String): String =
-    s"${cfg.pipelineRoot}/$prefix"
-
-  private def archivePath(cfg: UpdateConfig, prefix: String,
-      documentId: String, ts: String, suffix: String): String =
-    s"${cfg.pipelineRoot}/${cfg.archivePrefix}/$prefix/$documentId/$ts.$suffix"
 
   /** U7: optimistic single-field edit of a cached JSON doc. Missing file →
     * benign no-op; value mismatch → log-only; missing FIELD → error string
@@ -80,84 +66,56 @@ object Updates {
     None
   }
 
-  /** U6: edit the field in parser+embeddings JSONs (incl. translated),
-    * then archive the indexer npy + json → re-embed without re-parsing
-    * (reference `updated_document_actions.py:89-186`).
-    */
-  def updateDontParse(documentId: String, update: Update, cfg: UpdateConfig,
-      runTs: Instant, conf: Configuration): Seq[String] = {
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
-    for (prefix <- Seq(cfg.parserInputPrefix, cfg.embeddingsInputPrefix);
-         file <- documentFiles(prefixPath(cfg, prefix), documentId, "json"))
-      updateFileField(file, update.`type`, update.db_value, update.s3_value,
-        conf).foreach(errors += _)
-    val ts = archiveTsFmt.format(runTs)
-    for (suffix <- Seq("npy", "json"))
-      Storage.rename(
-        s"${prefixPath(cfg, cfg.indexerInputPrefix)}/$documentId.$suffix",
-        archivePath(cfg, cfg.indexerInputPrefix, documentId, ts, suffix),
-        conf).foreach(errors += _)
-    errors.toSeq
-  }
+  /** U4: a document's cache keys under one prefix, plain then translated. */
+  private def twins(documentId: String): Seq[String] =
+    Seq(documentId, s"${documentId}_translated_en")
 
-  /** U5: archive EVERY artifact (3 prefixes × json+npy × translated
-    * variants) → full re-processing next run
-    * (reference `updated_document_actions.py:189-237`).
+  /** What one action does to the cache: the prefixes whose `{id}.json`
+    * and translated twin get the U7 field edit, then the
+    * `(prefix, file, suffix)` artifacts archived, in rename order.
+    * A plain file and its twin archive to the same key, so the twin,
+    * renamed second, is the one that stays (SURVEY.md §2 U5).
     */
-  def parse(documentId: String, update: Update, cfg: UpdateConfig,
-      runTs: Instant, conf: Configuration): Seq[String] = {
-    val ts = archiveTsFmt.format(runTs)
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
-    for (prefix <- Seq(cfg.parserInputPrefix, cfg.embeddingsInputPrefix,
-           cfg.indexerInputPrefix);
-         suffix <- Seq("json", "npy");
-         file <- documentFiles(prefixPath(cfg, prefix), documentId, suffix))
-      Storage.rename(file,
-        archivePath(cfg, prefix, documentId, ts, suffix),
-        conf).foreach(errors += _)
-    errors.toSeq
-  }
-
-  /** U10: archive embeddings+indexer artifacts only → re-parse/re-embed
-    * without re-download (reference `updated_document_actions.py:240-288`).
-    */
-  def reparse(documentId: String, update: Update, cfg: UpdateConfig,
-      runTs: Instant, conf: Configuration): Seq[String] = {
-    val ts = archiveTsFmt.format(runTs)
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
-    for (prefix <- Seq(cfg.embeddingsInputPrefix, cfg.indexerInputPrefix);
-         suffix <- Seq("json", "npy");
-         file <- documentFiles(prefixPath(cfg, prefix), documentId, suffix))
-      Storage.rename(file,
-        archivePath(cfg, prefix, documentId, ts, suffix),
-        conf).foreach(errors += _)
-    errors.toSeq
-  }
-
-  /** U9: field edit across all 3 prefixes, no archiving
-    * (reference `updated_document_actions.py:291-339`).
-    */
-  def updateFieldInAllOccurences(documentId: String, update: Update,
-      cfg: UpdateConfig, runTs: Instant, conf: Configuration): Seq[String] = {
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
-    for (prefix <- Seq(cfg.parserInputPrefix, cfg.embeddingsInputPrefix,
-           cfg.indexerInputPrefix);
-         file <- documentFiles(prefixPath(cfg, prefix), documentId, "json"))
-      updateFileField(file, update.`type`, update.db_value, update.s3_value,
-        conf).foreach(errors += _)
-    errors.toSeq
-  }
-
-  private def runAction(name: String, documentId: String, update: Update,
-      cfg: UpdateConfig, runTs: Instant, conf: Configuration): Seq[String] =
-    name match {
-      case Actions.Parse => parse(documentId, update, cfg, runTs, conf)
-      case Actions.UpdateDontParse =>
-        updateDontParse(documentId, update, cfg, runTs, conf)
-      case Actions.Reparse => reparse(documentId, update, cfg, runTs, conf)
-      case Actions.UpdateFieldInAllOccurences =>
-        updateFieldInAllOccurences(documentId, update, cfg, runTs, conf)
+  private def effects(action: String, cfg: UpdateConfig, documentId: String)
+      : (Seq[String], Seq[(String, String, String)]) = {
+    val all = Seq(cfg.parserInputPrefix, cfg.embeddingsInputPrefix,
+      cfg.indexerInputPrefix)
+    def archiveAll(prefixes: Seq[String]) = for (p <- prefixes;
+      suffix <- Seq("json", "npy"); file <- twins(documentId)) yield (p, file, suffix)
+    action match {
+      // U5: archive every artifact → full re-processing next run
+      // (reference `updated_document_actions.py:189-237`)
+      case Actions.Parse => (Nil, archiveAll(all))
+      // U10: archive embeddings+indexer → re-parse/re-embed without
+      // re-download (reference `updated_document_actions.py:240-288`)
+      case Actions.Reparse => (Nil, archiveAll(all.tail))
+      // U9: field edit across all 3 prefixes, no archiving
+      // (reference `updated_document_actions.py:291-339`)
+      case Actions.UpdateFieldInAllOccurences => (all, Nil)
+      // U6: edit parser+embeddings, archive the plain indexer npy + json
+      // → re-embed without re-parsing
+      // (reference `updated_document_actions.py:89-186`)
+      case Actions.UpdateDontParse => (all.take(2),
+        Seq("npy", "json").map(suffix => (cfg.indexerInputPrefix, documentId, suffix)))
     }
+  }
+
+  /** Executes one action's [[effects]]: edits first, then archive
+    * renames; returns the per-file error list in that order.
+    */
+  private def runAction(action: String, documentId: String, update: Update,
+      cfg: UpdateConfig, runTs: Instant, conf: Configuration): Seq[String] = {
+    val (edits, archives) = effects(action, cfg, documentId)
+    val root = cfg.pipelineRoot
+    val ts = archiveTsFmt.format(runTs)
+    val editErrors = for (p <- edits; file <- twins(documentId)) yield
+      updateFileField(s"$root/$p/$file.json", update.`type`, update.db_value,
+        update.s3_value, conf)
+    val archiveErrors = for ((p, file, suffix) <- archives) yield
+      Storage.rename(s"$root/$p/$file.$suffix",
+        s"$root/${cfg.archivePrefix}/$p/$documentId/$ts.$suffix", conf)
+    (editErrors ++ archiveErrors).flatten
+  }
 
   /** Python `str(list)` of the per-action error list — the reference
     * stringifies it into `UpdateResult.error`, so "[]" means success
@@ -175,8 +133,8 @@ object Updates {
       conf: Configuration): Seq[UpdateResult] = {
     val actions = updates.map(u => (u, dispatch(u.`type`)))
     orderActions(actions).map { case (update, actionName) =>
-      val errors = runAction(actionName, documentId, update, cfg, runTs, conf)
-      UpdateResult(documentId, update.`type`, stringifyErrors(errors))
+      UpdateResult(documentId, update.`type`, stringifyErrors(
+        runAction(actionName, documentId, update, cfg, runTs, conf)))
     }
   }
 }

@@ -4,8 +4,7 @@ package graft.model
   *
   * Re-expresses the reference's constant maps
   * (`base/types.py:17-69` and the update dispatch table
-  * `base/updated_document_actions.py:453-461`) as Scala values. These feed
-  * broadcast dispatch joins / `when` chains — never shuffled.
+  * `base/updated_document_actions.py:453-461`) as Scala values.
   */
 object Mappings {
 
@@ -14,11 +13,6 @@ object Mappings {
     "application/vnd.openxmlformats-officedocument.wordprocessingml.document"
   val ContentTypePdf = "application/pdf"
   val ContentTypeDoc = "application/msword"
-
-  val SingleFileContentTypes: Set[String] = Set(ContentTypePdf, ContentTypeDocx)
-  val MultiFileContentTypes: Set[String] = Set(ContentTypeHtml)
-  val SupportedContentTypes: Set[String] =
-    SingleFileContentTypes ++ MultiFileContentTypes
 
   /** content type -> canonical file extension (`types.py:45-50`). */
   val FileExtensionMapping: Map[String, String] = Map(
@@ -31,13 +25,6 @@ object Mappings {
   /** file extension -> content type (reversed mapping, `types.py:52`). */
   val ContentTypeMapping: Map[String, String] =
     FileExtensionMapping.map(_.swap)
-
-  /** document category -> backend document type (`types.py:38-44`). */
-  val CategoryMapping: Map[String, String] = Map(
-    "executive" -> "Policy",
-    "legislative" -> "Law",
-    "litigation" -> "Litigation"
-  )
 
   /** update type -> pipeline JSON field to edit (`types.py:63-69`). */
   val PipelineFieldMapping: Map[String, String] = Map(
@@ -66,12 +53,4 @@ object Mappings {
     "slug" -> Actions.UpdateFieldInAllOccurences,
     "reparse" -> Actions.Reparse
   )
-
-  /** Execution priority inside one document's action list: parse
-    * short-circuits everything (handled separately, U3), otherwise
-    * `update_dont_parse` sorts last (`updated_document_actions.py:65-86`).
-    */
-  val ActionPriority: Map[String, Int] = Map(
-    Actions.UpdateDontParse -> 1
-  ).withDefaultValue(0)
 }

@@ -9,8 +9,7 @@ import org.apache.spark.sql.types._
   *  - control document `PipelineUpdates` (reference `base/utils.py:30-31`)
   *  - `BackendDocument` / `Update` shapes (fixture
   *    `tests/fixtures/pipeline_in/input/.../new_and_updated_documents.json`)
-  *  - `ParserInput` output record (`base/new_document_actions.py:88-95`)
-  *  - result rows (`base/types.py:72-138`)
+  *  - result rows (`base/types.py:95-138`)
   *
   * Polymorphic `Update.s3_value` / `db_value` (string | object | null in the
   * source JSON) are carried as canonical JSON *strings* so the schema stays
@@ -49,17 +48,6 @@ object Schemas {
       family_slug: String
   )
 
-  /** An event associated with a document (reference `types.py:55-60`).
-    * Deliberately unreferenced: the reference declares this record without
-    * using it either — it is part of the schema SURFACE being mirrored
-    * (SURVEY §1.2), available to control files that carry event lists.
-    */
-  case class Event(
-      name: String,
-      description: String,
-      created_ts: java.sql.Timestamp
-  )
-
   /** One update instruction for an already-ingested document.
     * `s3Value`/`dbValue` are canonical JSON text (string|object|null).
     */
@@ -67,29 +55,6 @@ object Schemas {
       `type`: String,
       s3_value: Option[String],
       db_value: Option[String]
-  )
-
-  /** The parser-input record emitted per new document
-    * (reference `base/new_document_actions.py:88-95`). The full source
-    * document is embedded as `document_metadata`.
-    */
-  case class ParserInput(
-      document_id: String,
-      document_name: String,
-      document_description: String,
-      document_source_url: Option[String],
-      document_cdn_object: Option[String],
-      document_content_type: Option[String],
-      document_md5_sum: Option[String],
-      document_slug: String,
-      document_metadata: BackendDocument
-  )
-
-  /** Result of uploading one normalized document (`base/types.py:72-77`). */
-  case class UploadResult(
-      cdn_object: Option[String],
-      md5_sum: Option[String],
-      content_type: Option[String]
   )
 
   /** Result of one update action (`base/types.py:95-100`). The reference
@@ -149,14 +114,5 @@ object Schemas {
     StructField("metadata", docMetaSchema),
     StructField("slug", StringType),
     StructField("family_slug", StringType)
-  ))
-
-  /** Raw update element: the polymorphic value fields are read as VARIANT
-    * via `parse_json` then re-serialized with `to_json` (ControlFile source).
-    */
-  val updateSchema: StructType = StructType(Seq(
-    StructField("type", StringType),
-    StructField("s3_value", StringType),
-    StructField("db_value", StringType)
   ))
 }

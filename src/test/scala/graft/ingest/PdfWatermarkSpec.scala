@@ -12,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the watermarked PDF has page_count + 1 pages, the appended page has the
   * same dimensions as the previous last page, and its extracted text
   * equals the watermark text after whitespace normalization — run against
-  * the reference's own 54-page LibreOffice fixture PDF, plus a synthetic
-  * PDF-1.5 file (cross-reference stream + object stream) covering the
-  * modern xref flavor the fixture doesn't.
+  * the reference's own 54-page LibreOffice fixture PDF, plus two synthetic
+  * files that need no reference data: a classic-xref PDF 1.4 twin of the
+  * fixture's cases (nested page tree, inherited /MediaBox) and a PDF 1.5
+  * file (cross-reference stream + object stream) covering the modern xref
+  * flavor the fixture doesn't.
   */
 class PdfWatermarkSpec extends AnyFunSuite {
 
@@ -73,6 +75,62 @@ class PdfWatermarkSpec extends AnyFunSuite {
       "a-very-long-path-segment-that-will-not-fit-on-one-line/" +
       "and-some-more.pdf.\n\n" + ("word " * 200).trim)
     contract(pdf, text)
+  }
+
+  test("hermetic classic-xref PDF: nested page tree, inherited MediaBox, watermarked twice") {
+    val pdf = buildClassicXrefPdf()
+    val doc = new PdfWatermark.Doc(pdf)
+    assert(!doc.xrefIsStream)
+    assert(doc.pageLeafCount === 3)
+    assert(doc.lastPageSize === ((595.0, 842.0)))
+    assert(new String(doc.lastPageContent, ISO_8859_1) === "BT /F0 12 Tf (page 3) Tj ET")
+    val text = Converter.watermarkText("https://example.com",
+      Instant.parse("2023-01-01T12:00:00Z"))
+    val out = contract(pdf, text)
+    // the second run follows the /Prev chain through the section the
+    // first run appended, which must itself be a classic xref table
+    assert(!new PdfWatermark.Doc(out).xrefIsStream)
+    val twice = contract(out, text)
+    assert(new PdfWatermark.Doc(twice).pageLeafCount === 5)
+  }
+
+  test("long text word-wraps within the margin box (hermetic classic-xref PDF)") {
+    val text = ("Original publicly accessible source: https://example.com/" +
+      "a-very-long-path-segment-that-will-not-fit-on-one-line/" +
+      "and-some-more.pdf.\n\n" + ("word " * 200).trim)
+    contract(buildClassicXrefPdf(), text)
+  }
+
+  /** Builds a 3-page PDF 1.4 file with a classic xref table. The root
+    * /Pages node carries the only /MediaBox (A4) and two intermediate
+    * /Pages nodes hold the leaves, so the last page inherits its size
+    * through two levels.
+    */
+  private def buildClassicXrefPdf(): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
+    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
+    def obj(body: String): Unit = {
+      offsets += out.size()
+      w(s"${offsets.size} 0 obj\n$body\nendobj\n")
+    }
+    def stream(content: String): String =
+      s"<< /Length ${content.length} >>\nstream\n$content\nendstream"
+    w("%PDF-1.4\n")
+    obj("<< /Type /Catalog /Pages 2 0 R >>")                              // 1
+    obj("<< /Type /Pages /Kids [ 3 0 R 4 0 R ] /Count 3 " +
+      "/MediaBox [ 0 0 595 842 ] >>")                                      // 2
+    obj("<< /Type /Pages /Parent 2 0 R /Kids [ 5 0 R 6 0 R ] /Count 2 >>") // 3
+    obj("<< /Type /Pages /Parent 2 0 R /Kids [ 7 0 R ] /Count 1 >>")       // 4
+    for ((parent, i) <- Seq(3, 3, 4).zipWithIndex)                        // 5-7
+      obj(s"<< /Type /Page /Parent $parent 0 R /Contents ${8 + i} 0 R >>")
+    for (page <- 1 to 3) obj(stream(s"BT /F0 12 Tf (page $page) Tj ET"))  // 8-10
+    val xrefOff = out.size()
+    w(s"xref\n0 ${offsets.size + 1}\n0000000000 65535 f \n")
+    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
+    w(s"trailer\n<< /Size ${offsets.size + 1} /Root 1 0 R >>\n" +
+      s"startxref\n$xrefOff\n%%EOF\n")
+    out.toByteArray
   }
 
   test("xref-stream + object-stream PDF (modern flavor)") {
