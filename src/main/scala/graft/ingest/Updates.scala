@@ -133,8 +133,8 @@ object Updates {
       conf: Configuration): Seq[UpdateResult] = {
     val actions = updates.map(u => (u, dispatch(u.`type`)))
     orderActions(actions).map { case (update, actionName) =>
-      UpdateResult(documentId, update.`type`, stringifyErrors(
-        runAction(actionName, documentId, update, cfg, runTs, conf)))
+      val errors = runAction(actionName, documentId, update, cfg, runTs, conf)
+      UpdateResult(documentId, update.`type`, stringifyErrors(errors))
     }
   }
 }
